@@ -4,15 +4,58 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from cloudcomputing_flink_application_spark import cli
 
 REF_VT = "/root/reference/VehicleTelematics/input/data_small.csv"
 REF_TAXI = "/root/reference/YellowTaxi/input/q2testData.csv"
 
+# FIXTURES.md §2 example row, cut around the columns no query reads:
+# passenger_count .. improvement_surcharge (3-15) and airport_fee (18).
+_TAXI_UNREAD_3_15 = "1.0,0.69,1.0,N,162,100,1,5.0,0.5,0.5,1.76,0.0,0.3"
+_TAXI_UNREAD_18 = "0.0"
 
-def test_vehicle_telematics_cli(spark, tmp_path):
+
+def write_trips_csv(path) -> str:
+    """Write tests/test_taxi.py's ``TRIPS`` as a headerless 19-column
+    yellow-taxi CSV (FIXTURES.md §2) and return its path."""
+    from tests.test_taxi import TRIPS
+
+    fmt = "%Y-%m-%d %H:%M:%S"
+    with open(path, "w") as f:
+        for vendor, pickup, dropoff, total, surcharge in TRIPS:
+            f.write(
+                f"{vendor},{pickup.strftime(fmt)},{dropoff.strftime(fmt)},"
+                f"{_TAXI_UNREAD_3_15},{total},{surcharge},{_TAXI_UNREAD_18}\n"
+            )
+    return str(path)
+
+
+@pytest.fixture
+def vt_csv(tmp_path):
+    """The reference's data_small.csv where it is checked out, else the
+    equivalent in-repo rows (tests/test_telematics.py ``DATA_SMALL``) as a
+    headerless 8-column CSV; the data_small goldens hold for both
+    (FIXTURES.md §4)."""
+    if os.path.exists(REF_VT):
+        return REF_VT
+    from tests.test_telematics import DATA_SMALL
+
+    path = tmp_path / "data_small.csv"
+    path.write_text("".join(",".join(map(str, r)) + "\n" for r in DATA_SMALL))
+    return str(path)
+
+
+_needs_ref_taxi = pytest.mark.skipif(
+    not os.path.exists(REF_TAXI),
+    reason=f"{REF_TAXI} is absent; its goldens are facts about that file's rows",
+)
+
+
+def test_vehicle_telematics_cli(spark, tmp_path, vt_csv):
     out = str(tmp_path / "vt")
-    cli.main(["vehicle-telematics", "--input", REF_VT, "--output", out])
+    cli.main(["vehicle-telematics", "--input", vt_csv, "--output", out])
     assert sorted(os.listdir(out)) == [
         "accidents.csv",
         "avgspeedfines.csv",
@@ -24,6 +67,7 @@ def test_vehicle_telematics_cli(spark, tmp_path):
         assert f.read().strip() == ""  # no speeders in data_small
 
 
+@_needs_ref_taxi
 def test_congestion_area_cli(spark, tmp_path):
     out = str(tmp_path / "cong.csv")
     cli.main(["congestion-area", "--input", REF_TAXI, "--output", out])
@@ -31,6 +75,7 @@ def test_congestion_area_cli(spark, tmp_path):
         assert f.read().strip() == "2022/03/01,8,20.06"
 
 
+@_needs_ref_taxi
 def test_saturated_vendor_cli(spark, tmp_path):
     out = str(tmp_path / "sat.csv")
     cli.main(["saturated-vendor", "--input", REF_TAXI, "--output", out])
@@ -39,9 +84,9 @@ def test_saturated_vendor_cli(spark, tmp_path):
     assert all(line.endswith(",2") for line in lines)
 
 
-def test_vehicle_telematics_cli_streaming(spark, tmp_path):
+def test_vehicle_telematics_cli_streaming(spark, tmp_path, vt_csv):
     out = str(tmp_path / "vts")
-    cli.main(["vehicle-telematics", "--input", REF_VT, "--output", out, "--streaming"])
+    cli.main(["vehicle-telematics", "--input", vt_csv, "--output", out, "--streaming"])
     avg = spark.read.schema(
         "time1 INT, time2 INT, vid INT, xway INT, dir INT, avgspd INT"
     ).csv(f"{out}/avgspeedfines")
@@ -49,10 +94,37 @@ def test_vehicle_telematics_cli_streaming(spark, tmp_path):
 
 
 def test_congestion_area_cli_show(tmp_path, capfd):
+    # where q2testData.csv is absent, the in-repo TRIPS rows: their
+    # Q-CONG day 1 is 2022/03/01 as well
+    taxi = (
+        REF_TAXI
+        if os.path.exists(REF_TAXI)
+        else write_trips_csv(tmp_path / "trips.csv")
+    )
     out = str(tmp_path / "cong_show.csv")
-    cli.main(["congestion-area", "--input", REF_TAXI, "--output", out, "--show"])
+    cli.main(["congestion-area", "--input", taxi, "--output", out, "--show"])
     captured = capfd.readouterr()
     assert "2022/03/01" in captured.out  # O2 print sink
+
+
+def test_taxi_cli_in_repo_rows(spark, tmp_path):
+    # Both taxi subcommands on the in-repo TRIPS rows, whose goldens are
+    # hand-derived in tests/test_taxi.py: 60.57/3 = 20.19; 10.005 rounds
+    # HALF_UP to 10.01; gaps of 5m and 9m59s fire, exactly 10m does not.
+    taxi = write_trips_csv(tmp_path / "trips.csv")
+    cong, sat = str(tmp_path / "cong.csv"), str(tmp_path / "sat.csv")
+    cli.main(["congestion-area", "--input", taxi, "--output", cong])
+    cli.main(["saturated-vendor", "--input", taxi, "--output", sat])
+    with open(cong) as f:
+        assert set(f.read().strip().split("\n")) == {
+            "2022/03/01,3,20.19",
+            "2022/03/02,2,10.01",
+        }
+    with open(sat) as f:
+        assert set(f.read().strip().split("\n")) == {
+            "5,2022-03-03 10:00:00,2022-03-03 10:30:00,2",
+            "6,2022-03-03 10:05:00,2022-03-03 10:45:00,2",
+        }
 
 
 def test_write_parquet_partitioned(spark, tmp_path):

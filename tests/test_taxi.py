@@ -27,32 +27,36 @@ TRIP_COLS = [
 ]
 
 
+# Hand-derived Q-CONG / Q-SAT rows; tests/test_cli.py writes the same rows
+# as a 19-column CSV for the taxi subcommands.
+TRIPS = [
+    # day 1: three surcharged trips, avg hits a HALF_UP boundary:
+    # (10.565+20.00+30.00)/3 = 20.188333 -> 20.19? No: use exact cents.
+    # totals 10.56 + 20.01 + 30.00 = 60.57 / 3 = 20.19 exact.
+    (1, ts("2022-03-01 00:00:03"), ts("2022-03-01 00:09:02"), 10.56, 2.5),
+    (2, ts("2022-03-01 08:00:00"), ts("2022-03-01 08:20:00"), 20.01, 2.5),
+    (1, ts("2022-03-01 23:59:59"), ts("2022-03-02 00:10:00"), 30.00, 2.5),
+    # day 1: non-surcharged trip excluded from Q-CONG
+    (1, ts("2022-03-01 12:00:00"), ts("2022-03-01 12:30:00"), 99.99, 0.0),
+    # day 2: two surcharged trips; avg = (10.00+10.01)/2 = 10.005 -> 10.01
+    # (HALF_UP on the exact half-cent boundary)
+    (3, ts("2022-03-02 01:00:00"), ts("2022-03-02 01:10:00"), 10.00, 2.5),
+    (3, ts("2022-03-02 02:00:00"), ts("2022-03-02 02:10:00"), 10.01, 2.5),
+    # vendor 5: back-to-back pairs around the 10-minute boundary
+    (5, ts("2022-03-03 10:00:00"), ts("2022-03-03 10:10:00"), 5.0, 0.0),
+    (5, ts("2022-03-03 10:15:00"), ts("2022-03-03 10:30:00"), 5.0, 0.0),  # gap 5m < 10 -> fires
+    (5, ts("2022-03-03 10:40:00"), ts("2022-03-03 10:50:00"), 5.0, 0.0),  # gap exactly 10m -> NOT fired (strict <)
+    (5, ts("2022-03-03 11:30:00"), ts("2022-03-03 11:40:00"), 5.0, 0.0),  # gap 40m -> no
+    # vendor 6 interleaved in file order with vendor 5 (per-vendor ordering
+    # must not depend on input order)
+    (6, ts("2022-03-03 10:05:00"), ts("2022-03-03 10:20:00"), 5.0, 0.0),
+    (6, ts("2022-03-03 10:29:59"), ts("2022-03-03 10:45:00"), 5.0, 0.0),  # gap 9m59s -> fires
+]
+
+
 @pytest.fixture(scope="module")
 def trips(spark):
-    rows = [
-        # day 1: three surcharged trips, avg hits a HALF_UP boundary:
-        # (10.565+20.00+30.00)/3 = 20.188333 -> 20.19? No: use exact cents.
-        # totals 10.56 + 20.01 + 30.00 = 60.57 / 3 = 20.19 exact.
-        (1, ts("2022-03-01 00:00:03"), ts("2022-03-01 00:09:02"), 10.56, 2.5),
-        (2, ts("2022-03-01 08:00:00"), ts("2022-03-01 08:20:00"), 20.01, 2.5),
-        (1, ts("2022-03-01 23:59:59"), ts("2022-03-02 00:10:00"), 30.00, 2.5),
-        # day 1: non-surcharged trip excluded from Q-CONG
-        (1, ts("2022-03-01 12:00:00"), ts("2022-03-01 12:30:00"), 99.99, 0.0),
-        # day 2: two surcharged trips; avg = (10.00+10.01)/2 = 10.005 -> 10.01
-        # (HALF_UP on the exact half-cent boundary)
-        (3, ts("2022-03-02 01:00:00"), ts("2022-03-02 01:10:00"), 10.00, 2.5),
-        (3, ts("2022-03-02 02:00:00"), ts("2022-03-02 02:10:00"), 10.01, 2.5),
-        # vendor 5: back-to-back pairs around the 10-minute boundary
-        (5, ts("2022-03-03 10:00:00"), ts("2022-03-03 10:10:00"), 5.0, 0.0),
-        (5, ts("2022-03-03 10:15:00"), ts("2022-03-03 10:30:00"), 5.0, 0.0),  # gap 5m < 10 -> fires
-        (5, ts("2022-03-03 10:40:00"), ts("2022-03-03 10:50:00"), 5.0, 0.0),  # gap exactly 10m -> NOT fired (strict <)
-        (5, ts("2022-03-03 11:30:00"), ts("2022-03-03 11:40:00"), 5.0, 0.0),  # gap 40m -> no
-        # vendor 6 interleaved in file order with vendor 5 (per-vendor ordering
-        # must not depend on input order)
-        (6, ts("2022-03-03 10:05:00"), ts("2022-03-03 10:20:00"), 5.0, 0.0),
-        (6, ts("2022-03-03 10:29:59"), ts("2022-03-03 10:45:00"), 5.0, 0.0),  # gap 9m59s -> fires
-    ]
-    return spark.createDataFrame(rows, schema=TRIP_COLS)
+    return spark.createDataFrame(TRIPS, schema=TRIP_COLS)
 
 
 def test_congestion_daily(trips):
