@@ -26,7 +26,11 @@ from cloudcomputing_flink_application_spark.operators import (
     textstats,
 )
 from tests.conftest import TESTDATA
-from tests.oracle_harness import compare_query, duck_connection
+from tests.oracle_harness import (
+    compare_query,
+    duck_connection,
+    materialize_ctes,
+)
 
 SF_DIR = f"{TESTDATA}/sf0.001"
 
@@ -81,7 +85,11 @@ OFF_REGISTRY = {
     # r11 end-to-end training-data composition (clean -> purge -> pack);
     # each stage is ALSO individually gated (clean/purge via the registry,
     # pack via pipe_pack_chunks) — this pins the composed dataflow itself.
-    "off_training_prep": (pipeline.training_prep, pipeline.TRAINING_PREP_SQL),
+    # Its shared CTEs are materialized so DuckDB runs each once.
+    "off_training_prep": (
+        pipeline.training_prep,
+        materialize_ctes(pipeline.TRAINING_PREP_SQL),
+    ),
     # r12: the method-keyed duplicate-rate report (exact / minhash_cc /
     # simhash under one min-id-keeps flag convention), composed from the
     # families' own oracle constants
@@ -254,7 +262,7 @@ OFF_REGISTRY_SF = {
             spark.read.parquet(f"{sf_dir}/documents.parquet"),
             embeddings=spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
         ),
-        pipeline.TRAINING_PREP_SEMANTIC_SQL,
+        materialize_ctes(pipeline.TRAINING_PREP_SEMANTIC_SQL),
     ),
 }
 

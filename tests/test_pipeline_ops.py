@@ -624,7 +624,7 @@ def test_training_prep_semantic_conservation_and_custom_tau_oracle(spark):
         training_prep_semantic_sql,
     )
     from tests.conftest import TESTDATA
-    from tests.oracle_harness import canon_frame
+    from tests.oracle_harness import canon_frame, materialize_ctes
 
     sf = f"{TESTDATA}/sf0.001"
     tau = 0.2
@@ -635,7 +635,7 @@ def test_training_prep_semantic_conservation_and_custom_tau_oracle(spark):
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf}/{t}.parquet')"
         )
-    oracle = con.execute(training_prep_semantic_sql(tau)).df()
+    oracle = con.execute(materialize_ctes(training_prep_semantic_sql(tau))).df()
     con.close()
 
     from cloudcomputing_flink_application_spark.operators import dedup
