@@ -18,8 +18,9 @@ Scale notes (100 TB stance):
   bucket (the previous non-empty bucket's last trip, injected as a phantom
   predecessor): identical lag-1 semantics, task size bounded by the bucket,
   hot vendors spread across as many tasks as they have buckets.  The
-  streaming variant (streaming.jobs.saturated_vendors_stream) has the
-  bounded-state property naturally (O(1) state per key, arrival-ordered).
+  streaming variant (streaming.jobs.saturated_vendors_stream) runs this
+  operator over each vendor's last trip plus each micro-batch (O(1)
+  carried rows per key).
 """
 
 from __future__ import annotations

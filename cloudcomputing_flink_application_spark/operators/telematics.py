@@ -63,9 +63,10 @@ def average_speed_fines(
     reports interleave 52/56 (or re-enter 52 after 56) fires once per
     transition, each fire reading the RUNNING reduce state at that point —
     not once per (vid, xway).  The streaming variant
-    (``streaming.jobs.average_speed_fines_stream``) implements the same
-    dataflow statefully; batch == streaming is pinned by
-    tests/test_streaming.py including a multi-traversal corpus.
+    (``streaming.jobs.average_speed_fines_stream``) runs this operator over
+    each vid's carried reduce rows plus each micro-batch; batch ==
+    streaming is pinned by tests/test_streaming.py including
+    multi-traversal corpora.
 
     Pinned reference behaviors (SURVEY.md §2.11):
     - only dir=0 can emit (a dir=1 traversal meets seg 56 first — pinned,

@@ -7,12 +7,12 @@ Pins the semantics the reference relies on implicitly:
   SaturatedVendor.java:109-113).  All event-time windowing below assumes it.
 - AQE on: runtime partition coalescing + skew-join handling replace the
   hand-tuned parallelism the reference hard-codes (``setParallelism(1)``).
-- Arrow on: every Pandas-UDF operator (count windows, multimodal decode)
-  rides the vectorized Arrow path.
+- Arrow on: every Pandas-UDF operator (multimodal decode) rides the
+  vectorized Arrow path.
 
-Scale note: ``shuffle_partitions`` defaults to the local core count for
-tests; on a real cluster this is overridden (AQE coalesces down from a
-deliberately high initial number, so the same code runs unchanged at 100 TB).
+Scale note: ``shuffle_partitions`` defaults to the usable core count; on
+a real cluster this is overridden (AQE coalesces down from a deliberately
+high initial number, so the same code runs unchanged at 100 TB).
 """
 
 from __future__ import annotations
@@ -21,7 +21,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``local[N]`` width and shuffle partitions: ``SPARK_GRAFT_CPUS``, else the
+#: cores this process may run on (a stateful stream freezes its partition
+#: count into its checkpoint, so an oversized default sticks).
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(

@@ -7,42 +7,39 @@ logical plans run incrementally:
 - Q-CONG: watermarked 1-day tumbling window aggregation (append mode) —
   Spark's partial-agg + state store replaces the reference's parallelism-1
   ``windowAll`` (CongestionArea.java:60) with a fully parallel plan.
-- Q-ACC / Q-SAT: keyed sliding count windows on the custom
-  ``streaming.state.sliding_count_window`` operator.
-- Q-AVGSPD: a faithful port of the reference's running-reduce + pair-fire
-  dataflow (VehicleTelematics.java:103-152) as keyed GroupState.
+- Q-ACC / Q-AVGSPD / Q-SAT: ``foreachBatch`` queries that run the
+  oracle-pinned batch operators (``operators.telematics``,
+  ``operators.taxi``) over each key's carried tail plus the new rows, with
+  exactly-once sinks from the offset log plus idempotent per-batch writes
+  (Structured Streaming, SIGMOD 2018).
 
 Watermark policy: ``0 seconds`` everywhere — the reference's
 AscendingTimestampExtractor admits zero lateness (SURVEY.md §2.3); late rows
-drop, matching Flink's behavior on the course data.
+drop, matching Flink's behavior on the course data.  The tail queries assume
+the same: each key's rows arrive in ascending event time.
 
 O3 (one job, three sinks — VehicleTelematics.java:179-181):
 ``run_telematics_job`` starts the three telematics queries against one input
-directory and returns their handles; each maintains its own keyed state, as
-Flink's single JobGraph did internally.
+directory and returns their handles; each keeps its own checkpoint.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from cloudcomputing_flink_application_spark.operators.taxi import SATURATION_GAP_MIN
+from cloudcomputing_flink_application_spark.operators.taxi import saturated_vendors
 from cloudcomputing_flink_application_spark.operators.telematics import (
     ACCIDENT_RUN,
-    AVG_SPEED_LIMIT,
     SEG_END,
     SEG_START,
     SPEED_LIMIT,
+    accident_reports,
+    average_speed_fines,
     speed_radar,
 )
-from cloudcomputing_flink_application_spark.streaming.state import sliding_count_window
 
 # --- Q-SPEED -----------------------------------------------------------------
 
@@ -81,172 +78,139 @@ def congestion_daily_stream(trips: DataFrame) -> DataFrame:
     )
 
 
-# --- Q-ACC -------------------------------------------------------------------
-
-_ACC_SCHEMA = T.StructType(
-    [
-        T.StructField("time1", T.IntegerType()),
-        T.StructField("time2", T.IntegerType()),
-        T.StructField("vid", T.IntegerType()),
-        T.StructField("xway", T.IntegerType()),
-        T.StructField("seg", T.IntegerType()),
-        T.StructField("dir", T.IntegerType()),
-        T.StructField("pos", T.IntegerType()),
-    ]
-)
+# --- Q-ACC / Q-AVGSPD / Q-SAT: batch operators over a carried tail --------------
+#
+# Each of these queries is causal per key: an output row depends only on rows
+# at or before the row that fires it, and only on a bounded set of them (the
+# query's TAIL).  So a micro-batch can run the oracle-pinned batch operator
+# over the previous batch's tail plus its own rows; outputs fired at tail rows
+# are exactly ``op(tail)``, which the batch subtracts as a multiset.
 
 
-def accident_reports_stream(cars: DataFrame, run: int = ACCIDENT_RUN) -> DataFrame:
-    """Q-ACC on the custom sliding count window (size 4, slide 1, key vid)."""
+def _last_rows(df: DataFrame, key: str, order: list[str], n: int) -> DataFrame:
+    """The last ``n`` rows per ``key``, ordered by ``order`` ascending."""
+    w = Window.partitionBy(key).orderBy(*(F.col(c).desc() for c in order))
+    return df.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") <= n).drop("_r")
 
-    def emit(window: list[tuple], row: tuple) -> list[tuple]:
-        # window rows: (time, vid, xway, seg, dir, pos), oldest first
-        if len(window) == run and all(w[5] == window[0][5] for w in window):
-            first, last = window[0], window[-1]
-            return [(first[0], last[0], first[1], first[2], first[3], first[4], first[5])]
-        return []
 
-    return sliding_count_window(
-        cars,
-        keys=["vid"],
-        order_col="time",
-        buffer_cols=["time", "vid", "xway", "seg", "dir", "pos"],
-        n=run,
-        emit=emit,
-        output_schema=_ACC_SCHEMA,
+def _accidents_tail(cars: DataFrame) -> DataFrame:
+    """Q-ACC reads at most ``ACCIDENT_RUN - 1`` earlier rows per vid."""
+    return _last_rows(cars, "vid", ["time"], ACCIDENT_RUN - 1)
+
+
+def _avgspd_tail(cars: DataFrame) -> DataFrame:
+    """Q-AVGSPD's running reduce and transition test read, per vid, three
+    measured rows: the max-pos seg-52 row and the min-pos seg-56 row (each
+    earliest on pos ties, as the reduce keeps them) and the last row (its
+    seg is the next row's ``lag``)."""
+    measured = cars.filter((F.col("dir") == 0) & F.col("seg").isin(SEG_START, SEG_END))
+    pos = F.col("pos")
+    best = Window.partitionBy("vid", "seg").orderBy(
+        F.when(F.col("seg") == SEG_START, -pos).otherwise(pos), "time"
+    )
+    last = Window.partitionBy("vid").orderBy(F.col("time").desc())
+    return (
+        measured.withColumn("_b", F.row_number().over(best))
+        .withColumn("_l", F.row_number().over(last))
+        .filter((F.col("_b") == 1) | (F.col("_l") == 1))
+        .drop("_b", "_l")
     )
 
 
-# --- Q-SAT -------------------------------------------------------------------
-
-_SAT_SCHEMA = T.StructType(
-    [
-        T.StructField("vendor_id", T.IntegerType()),
-        T.StructField("first_pickup", T.StringType()),
-        T.StructField("last_dropoff", T.StringType()),
-        T.StructField("trips", T.IntegerType()),
-    ]
-)
+def _saturated_tail(trips: DataFrame) -> DataFrame:
+    """Q-SAT pairs each trip with the previous one of its vendor."""
+    return _last_rows(trips, "vendor_id", ["tpep_pickup_datetime", "tpep_dropoff_datetime"], 1)
 
 
-def saturated_vendors_stream(trips: DataFrame, gap_minutes: int = SATURATION_GAP_MIN) -> DataFrame:
-    """Q-SAT on the custom sliding count window (size 2, slide 1, key vendor).
+def _write_csv_part(df: DataFrame, path: str, batch_id: int, staging: str) -> None:
+    """Write ``df`` as one headerless CSV file ``<path>/part-<batch_id>``.
 
-    Matches the reference's hand-built GlobalWindows trigger/evictor
-    (SaturatedVendor.java:56-91 == countWindow(2,1), SURVEY.md §2.6 N4).
+    The file sits flat in ``path``, so a plain ``spark.read.csv(path)`` sees
+    every batch's rows with the query's own columns.  A replay of the batch
+    replaces the file, so at-least-once delivery never duplicates rows."""
+    spark = df.sparkSession
+    df.coalesce(1).write.mode("overwrite").csv(staging)
+    fs, dst = _fs_path(spark, f"{path}/part-{batch_id}")
+    _, written = _fs_path(spark, f"{staging}/part-*")
+    fs.mkdirs(dst.getParent())
+    fs.delete(dst, False)
+    for st in fs.globStatus(written) or []:
+        if not fs.rename(st.getPath(), dst):
+            raise IOError(f"rename {st.getPath()} -> {dst} failed")
+    fs.delete(written.getParent(), True)
+
+
+def _run_tail_stream(source: DataFrame, op, tail_of, path: str, checkpoint_dir: str):
+    """Start a ``foreachBatch`` query that runs the batch operator ``op``
+    incrementally over ``source``.
+
+    Batch ``b`` emits ``op(tail ∪ batch).exceptAll(op(tail))``, where the tail
+    is ``tail_of`` applied to the previous batch's ``tail ∪ batch``.  It
+    writes its rows with :func:`_write_csv_part` and its new tail as a full
+    parquet snapshot ``<checkpoint_dir>/tail/batch_id=<b>``; both are
+    idempotent per batch, so the offset log plus these writes give
+    exactly-once sinks (Structured Streaming's recovery contract).
+    Snapshots older than ``b - 1`` are pruned: a replay of ``b`` reads
+    snapshot ``b - 1``.
     """
-    gap_ms = gap_minutes * 60 * 1000
+    tails = f"{checkpoint_dir}/tail"
 
-    def emit(window: list[tuple], row: tuple) -> list[tuple]:
-        # rows: (vendor_id, pickup, dropoff)
-        if len(window) == 2:
-            prev, cur = window
-            if (cur[1] - prev[2]).total_seconds() * 1000 < gap_ms:
-                return [
-                    (
-                        prev[0],
-                        prev[1].strftime("%Y-%m-%d %H:%M:%S"),
-                        cur[2].strftime("%Y-%m-%d %H:%M:%S"),
-                        2,
-                    )
-                ]
-        return []
-
-    return sliding_count_window(
-        trips.select("vendor_id", "tpep_pickup_datetime", "tpep_dropoff_datetime"),
-        keys=["vendor_id"],
-        # (pickup, dropoff): same tiebreak as the batch window's ORDER BY, so
-        # simultaneous pickups pair identically on both surfaces (ADVICE r1).
-        order_col=["tpep_pickup_datetime", "tpep_dropoff_datetime"],
-        buffer_cols=["vendor_id", "tpep_pickup_datetime", "tpep_dropoff_datetime"],
-        n=2,
-        emit=emit,
-        output_schema=_SAT_SCHEMA,
-    )
-
-
-# --- Q-AVGSPD ----------------------------------------------------------------
-
-_AVG_SCHEMA = T.StructType(
-    [
-        T.StructField("time1", T.IntegerType()),
-        T.StructField("time2", T.IntegerType()),
-        T.StructField("vid", T.IntegerType()),
-        T.StructField("xway", T.IntegerType()),
-        T.StructField("dir", T.IntegerType()),
-        T.StructField("avgspd", T.IntegerType()),
-    ]
-)
-
-_AVG_STATE = T.StructType(
-    [
-        T.StructField("b52_t", T.IntegerType()),
-        T.StructField("b52_p", T.IntegerType()),
-        T.StructField("b56_t", T.IntegerType()),
-        T.StructField("b56_p", T.IntegerType()),
-        T.StructField("last_seg", T.IntegerType()),
-    ]
-)
-
-
-def average_speed_fines_stream(
-    cars: DataFrame,
-    seg_start: int = SEG_START,
-    seg_end: int = SEG_END,
-    limit_mph: int = AVG_SPEED_LIMIT,
-) -> DataFrame:
-    """Q-AVGSPD as the reference's running-reduce + pair-fire dataflow.
-
-    Per (vid): keep the max-pos seg-52 record and min-pos seg-56 record
-    (the reference's conditional reduce, VehicleTelematics.java:114-132);
-    a fire happens when consecutive reduce updates go 52 -> 56 (countWindow
-    (2,1) pairing + seg check, :255-288).  dir=1 is filtered: it provably
-    never emits (SURVEY.md §2.11) — pinned reference behavior.
-    """
-
-    measured = cars.filter(
-        (F.col("dir") == 0) & F.col("seg").isin(seg_start, seg_end)
-    ).select("time", "vid", "xway", "seg", "pos")
-
-    def process(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            b52_t, b52_p, b56_t, b56_p, last_seg = state.get
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        if batch_id == 0:
+            # a run under another checkpoint may have left sink files, a
+            # file-sink log or tails; a replay of batch 0 finds no later
+            # file of this run
+            _prune_stale_batch_partitions(spark, tails)
+            for stale in (f"{path}/part-*", f"{path}/_spark_metadata"):
+                fs, pattern = _fs_path(spark, stale)
+                for st in fs.globStatus(pattern) or []:
+                    fs.delete(st.getPath(), True)
+            tail = spark.createDataFrame([], batch.schema)
         else:
-            b52_t = b52_p = b56_t = b56_p = last_seg = None
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("time", kind="mergesort")
-            for time, vid, xway, seg, pos in pdf[
-                ["time", "vid", "xway", "seg", "pos"]
-            ].itertuples(index=False, name=None):
-                if seg == seg_start:
-                    if b52_p is None or pos > b52_p:
-                        b52_t, b52_p = time, pos
-                else:
-                    if b56_p is None or pos < b56_p:
-                        b56_t, b56_p = time, pos
-                if last_seg == seg_start and seg == seg_end and b52_t is not None:
-                    dpos, dt = b56_p - b52_p, b56_t - b52_t
-                    if dt > 0:
-                        v = int(int(dpos // dt) * 3600 // 1000 * 0.621371)
-                        if v > limit_mph:
-                            out.append((b52_t, b56_t, vid, xway, 0, v))
-                last_seg = seg
-        state.update((b52_t, b52_p, b56_t, b56_p, last_seg))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["time1", "time2", "vid", "xway", "dir", "avgspd"]
-            )
+            prev = f"{tails}/batch_id={batch_id - 1}"
+            if not _hadoop_path_exists(spark, prev):
+                raise RuntimeError(
+                    f"{prev} is missing: the carried tail of batch {batch_id - 1} "
+                    f"is lost, so batch {batch_id} cannot be computed exactly"
+                )
+            tail = spark.read.schema(batch.schema).parquet(prev)
+        cur = tail.unionByName(batch).persist()
+        try:
+            fresh = op(cur).exceptAll(op(tail))
+            _write_csv_part(fresh, path, batch_id, f"{checkpoint_dir}/staging")
+            tail_of(cur).write.mode("overwrite").parquet(f"{tails}/batch_id={batch_id}")
+        finally:
+            cur.unpersist()
+        _prune_batch_partitions_before(spark, tails, batch_id - 1)
 
-    return measured.groupBy("vid").applyInPandasWithState(
-        process,
-        outputStructType=_AVG_SCHEMA,
-        stateStructType=_AVG_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        source.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
     )
+
+
+def accident_reports_stream(cars: DataFrame, path: str, checkpoint_dir: str):
+    """Q-ACC as a started query writing CSV parts under ``path``: the batch
+    ``accident_reports`` over the last 3 rows per vid plus each batch."""
+    return _run_tail_stream(cars, accident_reports, _accidents_tail, path, checkpoint_dir)
+
+
+def average_speed_fines_stream(cars: DataFrame, path: str, checkpoint_dir: str):
+    """Q-AVGSPD as a started query writing CSV parts under ``path``: the
+    batch ``average_speed_fines`` over each vid's reduce rows plus each
+    batch.  Fires the tail rows alone produce were emitted before and are
+    subtracted."""
+    return _run_tail_stream(cars, average_speed_fines, _avgspd_tail, path, checkpoint_dir)
+
+
+def saturated_vendors_stream(trips: DataFrame, path: str, checkpoint_dir: str):
+    """Q-SAT as a started query writing CSV parts under ``path``: the batch
+    ``saturated_vendors`` over each vendor's last trip plus each batch, so
+    trips pair in (pickup, dropoff) order across batches exactly as in the
+    batch window (SaturatedVendor.java:56-91 == countWindow(2,1))."""
+    return _run_tail_stream(trips, saturated_vendors, _saturated_tail, path, checkpoint_dir)
 
 
 # --- streaming dedup ---------------------------------------------------------
@@ -2665,7 +2629,8 @@ def run_telematics_job(spark, input_dir: str, output_dir: str, schema=None):
     """Start the three telematics streaming queries over one CSV input dir,
     writing three CSV sinks (speedfines/, avgspeedfines/, accidents/) —
     the streaming counterpart of the reference's three-sink single job
-    (VehicleTelematics.java:179-189).  Returns the query handles.
+    (VehicleTelematics.java:179-189).  Each query checkpoints under
+    ``_chk/<sink>``.  Returns the query handles.
     """
     from cloudcomputing_flink_application_spark import schemas as SCH
 
@@ -2673,20 +2638,17 @@ def run_telematics_job(spark, input_dir: str, output_dir: str, schema=None):
         spark.readStream.schema(schema or SCH.CAR_REPORTS)
         .csv(input_dir)
     )
-    out = []
-    for name, q in (
-        ("speedfines", speed_radar_stream(cars)),
-        ("avgspeedfines", average_speed_fines_stream(cars)),
-        ("accidents", accident_reports_stream(cars)),
-    ):
-        out.append(
-            q.writeStream.outputMode("append")
-            .format("csv")
-            .option("path", f"{output_dir}/{name}")
-            .option("checkpointLocation", f"{output_dir}/_chk/{name}")
-            .start()
-        )
-    return out
+    chk = f"{output_dir}/_chk"
+    return [
+        speed_radar_stream(cars)
+        .writeStream.outputMode("append")
+        .format("csv")
+        .option("path", f"{output_dir}/speedfines")
+        .option("checkpointLocation", f"{chk}/speedfines")
+        .start(),
+        average_speed_fines_stream(cars, f"{output_dir}/avgspeedfines", f"{chk}/avgspeedfines"),
+        accident_reports_stream(cars, f"{output_dir}/accidents", f"{chk}/accidents"),
+    ]
 
 
 def sessionize_stream(

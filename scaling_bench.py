@@ -2374,160 +2374,6 @@ def bench_olap_join_100x(spark) -> dict:
     return results
 
 
-def _state_totals(q) -> dict:
-    """State-store footprint from the query's LAST progress record."""
-    for p in reversed(q.recentProgress):
-        prog = p if isinstance(p, dict) else json.loads(p.json)
-        ops = prog.get("stateOperators") or []
-        if ops:
-            return {
-                "state_rows": int(ops[0].get("numRowsTotal", -1)),
-                "state_bytes": int(ops[0].get("memoryUsedBytes", -1)),
-            }
-    return {"state_rows": -1, "state_bytes": -1}
-
-
-def bench_stream_window(spark) -> dict:
-    """r10 (VERDICT r9 #5): the keyed sliding count window
-    (streaming/state.py — the one Python-execution engine component,
-    backing the Q-ACC/Q-SAT/Q-AVGSPD streaming twins) measured on both
-    axes the brief names: keys x rows-per-key.  Per batch the operator
-    does O(rows) Python work (each arriving row forms one window) and
-    holds O(keys * (n-1)) buffered rows of state, so per-batch cost
-    should track TOTAL batch rows regardless of how they split between
-    keys, and the state footprint should track keys alone.  Fixture:
-    synthetic (vid, t, pos) batches, n=4 accident-shape window (emit on
-    four equal positions; 1% of keys are stopped cars so the emit path
-    executes), ONE parquet file per micro-batch."""
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from cloudcomputing_flink_application_spark.streaming.state import (
-        sliding_count_window,
-    )
-
-    n_batches = 4
-    schema = T.StructType(
-        [
-            T.StructField("vid", T.LongType()),
-            T.StructField("t", T.LongType()),
-            T.StructField("pos", T.LongType()),
-        ]
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("vid", T.LongType()),
-            T.StructField("t1", T.LongType()),
-            T.StructField("t2", T.LongType()),
-            T.StructField("pos", T.LongType()),
-        ]
-    )
-
-    def emit(window, row):
-        if len(window) == 4 and len({w[2] for w in window}) == 1:
-            return [(row[0], window[0][1], row[1], row[2])]
-        return []
-
-    def build(keys: int, rows_per_key: int) -> str:
-        name = f"streamwin_k{keys}_r{rows_per_key}"
-        root = WORK / name
-        if all(
-            (root / f"b{k:02d}" / "_SUCCESS").exists()
-            for k in range(n_batches)
-        ):
-            return str(root)
-        shutil.rmtree(root, ignore_errors=True)
-        base = 1_700_000_000
-        for b in range(n_batches):
-            # ascending t per key across batches; every 100th vid is a
-            # stopped car (constant pos) so windows actually emit
-            df = (
-                spark.range(keys)
-                .selectExpr("id AS vid")
-                .join(
-                    spark.range(rows_per_key).selectExpr("id AS i"),
-                    how="cross",
-                )
-                .selectExpr(
-                    "vid",
-                    f"{b} * {rows_per_key} + i AS t",
-                    "CASE WHEN vid % 100 = 0 THEN vid "
-                    f"ELSE vid * 1000 + {b} * {rows_per_key} + i END AS pos",
-                )
-            )
-            d = root / f"b{b:02d}"
-            df.coalesce(1).write.mode("overwrite").parquet(str(d))
-            for r, _, fs in os.walk(d):
-                for f in fs:
-                    os.utime(os.path.join(r, f), (base + b, base + b))
-        return str(root)
-
-    def run(keys: int, rows_per_key: int) -> dict:
-        src = build(keys, rows_per_key)
-        tmp = tempfile.mkdtemp(prefix="sg_streamwin_")
-        try:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{src}/*")
-            )
-            windows = sliding_count_window(
-                stream,
-                keys=["vid"],
-                order_col=["t"],
-                buffer_cols=["vid", "t", "pos"],
-                n=4,
-                emit=emit,
-                output_schema=out_schema,
-            )
-            q = (
-                windows.writeStream.format("parquet")
-                .option("path", f"{tmp}/out")
-                .option("checkpointLocation", f"{tmp}/chk")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                ms = _per_batch_ms(q)
-                state = _state_totals(q)
-            finally:
-                q.stop()
-            return {
-                "per_batch_ms": ms,
-                # batch 0 is JIT + empty state; steady state is the tail
-                "steady_ms": round(
-                    sum(ms[1:]) / max(1, len(ms[1:])), 1
-                ),
-                **state,
-            }
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    out: dict = {"n": 4, "batches": n_batches, "keys_axis": {}, "rows_axis": {}}
-    # the (1k keys, 10 rows/key) base point is SHARED between the axes —
-    # measured once and referenced twice, so the table cannot show two
-    # different numbers for the same workload and read as an axis
-    # difference (r10 review: the first run recorded 1344 vs 1202 ms for
-    # the identical config — pure run-to-run noise)
-    base = run(1000, 10)
-    for mult in (1, 4, 10):
-        out["keys_axis"][f"x{mult}"] = {
-            "keys": 1000 * mult,
-            "rows_per_key": 10,
-            **(base if mult == 1 else run(1000 * mult, 10)),
-        }
-    for mult in (1, 4, 10):
-        out["rows_axis"][f"x{mult}"] = {
-            "keys": 1000,
-            "rows_per_key": 10 * mult,
-            **(base if mult == 1 else run(1000, 10 * mult)),
-        }
-    return out
-
-
 def bench_pq_skew(spark) -> dict:
     """r10 (VERDICT r9 #6): skewed inverted-list serving.  On a pre-dedup
     corpus one corpus-scale near-dup blob lands in ONE IVF cell; the ADC
@@ -3160,9 +3006,6 @@ def main() -> None:
         return
     if section == "olap-join-100x":
         print(json.dumps({"olap_join_100x": bench_olap_join_100x(spark)}))
-        return
-    if section == "stream-window":
-        print(json.dumps({"stream_window": bench_stream_window(spark)}))
         return
     if section == "store-compact":
         print(json.dumps({"store_compact": bench_store_compaction(spark)}))

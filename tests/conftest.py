@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -56,3 +57,8 @@ def _release_operator_caches():
 def rows_set(df):
     """Order-insensitive row comparison helper."""
     return {tuple(r) for r in df.collect()}
+
+
+def rows_bag(df) -> Counter:
+    """Order-insensitive row comparison helper that counts duplicates."""
+    return Counter(tuple(r) for r in df.collect())

@@ -5,6 +5,8 @@ counterpart on the same data, with state carried across micro-batches
 from __future__ import annotations
 
 import os
+import shutil
+from collections import Counter
 
 import pytest
 
@@ -19,7 +21,7 @@ from cloudcomputing_flink_application_spark.operators.telematics import (
     speed_radar,
 )
 from cloudcomputing_flink_application_spark.streaming import jobs
-from tests.conftest import TESTDATA, rows_set
+from tests.conftest import TESTDATA, rows_bag, rows_set
 from tests.test_telematics import ACCIDENT_8, DATA_SMALL
 
 TAXI_CSV_1 = """1,2022-03-01 00:00:03,2022-03-01 00:09:02,1.0,1.0,1.0,N,1,1,1,5.0,0.5,0.5,0.0,0.0,0.3,10.56,2.5,0.0
@@ -59,6 +61,18 @@ def run_stream(spark, df, name: str):
     return spark.sql(f"SELECT * FROM {name}")
 
 
+def run_tail_stream(spark, stream_fn, source, schema, tmp_path, name: str):
+    """Run the carried-tail query ``stream_fn(source, path, checkpoint_dir)``
+    over everything available and read back its CSV sink."""
+    path = str(tmp_path / name)
+    q = stream_fn(source, path, str(tmp_path / f"{name}_chk"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.read.schema(schema).csv(path)
+
+
 def csv_lines(rows) -> list[str]:
     return ["\n".join(",".join(str(v) for v in r) for r in rows) + "\n"]
 
@@ -83,24 +97,25 @@ def test_speed_radar_stream(spark, car_stream):
     assert rows_set(out) == {(10, 1, 0, 5, 0, 95)}
 
 
-def test_accidents_stream_matches_batch(spark, car_stream):
+def test_accidents_stream_matches_batch(spark, car_stream, tmp_path):
     # split the 8-report stopped car across two files -> state crosses batches
     stream = car_stream([ACCIDENT_8[:3], ACCIDENT_8[3:]])
-    out = run_stream(spark, jobs.accident_reports_stream(stream), "acc_s")
     batch = accident_reports(
         spark.createDataFrame(ACCIDENT_8, schema=schemas.CAR_REPORTS)
     )
-    assert rows_set(out) == rows_set(batch)
+    out = run_tail_stream(spark, jobs.accident_reports_stream, stream, batch.schema, tmp_path, "acc_s")
+    assert rows_bag(out) == rows_bag(batch)
     assert out.count() == 5
 
 
-def test_avgspd_stream_matches_batch(spark, car_stream):
+def test_avgspd_stream_matches_batch(spark, car_stream, tmp_path):
     stream = car_stream([DATA_SMALL[:10], DATA_SMALL[10:]])
-    out = run_stream(spark, jobs.average_speed_fines_stream(stream), "avg_s")
     batch = average_speed_fines(
         spark.createDataFrame(DATA_SMALL, schema=schemas.CAR_REPORTS)
     )
-    assert rows_set(out) == rows_set(batch) == {(32, 36, 72, 0, 0, 225)}
+    out = run_tail_stream(spark, jobs.average_speed_fines_stream, stream, batch.schema, tmp_path, "avg_s")
+    assert rows_bag(out) == rows_bag(batch)
+    assert rows_set(out) == {(32, 36, 72, 0, 0, 225)}
 
 
 @pytest.fixture()
@@ -116,12 +131,12 @@ def taxi_stream(spark, tmp_path):
 
 
 def test_saturated_vendors_stream_matches_batch(spark, taxi_stream, tmp_path):
-    out = run_stream(spark, jobs.saturated_vendors_stream(taxi_stream), "sat_s")
     batch_df = spark.read.schema(schemas.TAXI_TRIPS).csv(str(tmp_path / "taxi"))
     batch = saturated_vendors(batch_df)
+    out = run_tail_stream(spark, jobs.saturated_vendors_stream, taxi_stream, batch.schema, tmp_path, "sat_s")
     # vendor 5: 10:00->10:30 pair fires (5m gap); 10:42 pickup vs 10:30 dropoff
     # = 12m gap, no fire
-    assert rows_set(out) == rows_set(batch)
+    assert rows_bag(out) == rows_bag(batch)
     assert out.count() == 1
 
 
@@ -154,12 +169,88 @@ def test_run_telematics_job_three_sinks(spark, tmp_path):
     finally:
         for q in queries:
             q.stop()
-    speed = spark.read.schema("time INT, vid INT, xway INT, seg INT, dir INT, spd INT").csv(f"{outd}/speedfines")
-    avg = spark.read.schema("time1 INT, time2 INT, vid INT, xway INT, dir INT, avgspd INT").csv(f"{outd}/avgspeedfines")
-    acc = spark.read.schema("time1 INT, time2 INT, vid INT, xway INT, seg INT, dir INT, pos INT").csv(f"{outd}/accidents")
+    speed, avg, acc = read_telematics_sinks(spark, outd)
     assert speed.count() == 0  # all speeds < 90 in this fixture
+    cars = spark.createDataFrame(rows, schema=schemas.CAR_REPORTS)
+    assert rows_bag(avg) == rows_bag(average_speed_fines(cars))
     assert rows_set(avg) == {(32, 36, 72, 0, 0, 225)}
+    assert rows_bag(acc) == rows_bag(accident_reports(cars))
     assert acc.count() == 5
+
+
+def read_telematics_sinks(spark, outd: str):
+    """The three CSV sinks of ``run_telematics_job``, read as the batch
+    operators' schemas."""
+    return (
+        spark.read.schema("time INT, vid INT, xway INT, seg INT, dir INT, spd INT").csv(f"{outd}/speedfines"),
+        spark.read.schema("time1 INT, time2 INT, vid INT, xway INT, dir INT, avgspd INT").csv(f"{outd}/avgspeedfines"),
+        spark.read.schema("time1 INT, time2 INT, vid INT, xway INT, seg INT, dir INT, pos INT").csv(f"{outd}/accidents"),
+    )
+
+
+def sf0001_car_rows(spark) -> list[tuple]:
+    """The sf0.001 event corpus as car reports, in (time, vid) order."""
+    from cloudcomputing_flink_application_spark.sources.derived import car_reports_from_events
+    from cloudcomputing_flink_application_spark.sources.readers import read_events
+
+    cars = car_reports_from_events(read_events(spark, f"{TESTDATA}/sf0.001")).orderBy("time", "vid")
+    return [tuple(r) for r in cars.collect()]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("replay", [False, True], ids=["restart", "replay"])
+def test_run_telematics_job_exactly_once_across_restart(spark, tmp_path, replay):
+    # Structured Streaming's exactly-once claim on our own job: stop it after
+    # batch 1, then restart it on the same checkpoints.  With ``replay`` the
+    # last batch's commit is deleted first, so the restart re-runs batch 1
+    # and its sink writes must replace, not duplicate, what it wrote before.
+    rows = sf0001_car_rows(spark)
+    chunks = [rows[j * 200:(j + 1) * 200] for j in range(5)]
+    staged, ind, outd = str(tmp_path / "staged"), str(tmp_path / "in"), str(tmp_path / "out")
+    write_files(staged, ["".join(",".join(map(str, r)) + "\n" for r in c) for c in chunks])
+    os.makedirs(ind)
+
+    def publish(i: int) -> None:
+        name = f"part-{i:03d}.csv"
+        shutil.copy2(os.path.join(staged, name), os.path.join(ind, name))
+
+    queries = jobs.run_telematics_job(spark, ind, outd)
+    try:
+        for i in range(2):  # one batch per published file
+            publish(i)
+            for q in queries:
+                q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    names = ("speedfines", "avgspeedfines", "accidents")
+
+    def commits(n: str) -> list[str]:
+        return sorted(f for f in os.listdir(f"{outd}/_chk/{n}/commits") if not f.startswith("."))
+
+    for n in names:
+        assert commits(n) == ["0", "1"], n
+        if replay:
+            for f in ("1", ".1.crc"):
+                os.remove(f"{outd}/_chk/{n}/commits/{f}")
+    for i in range(2, 5):
+        publish(i)
+    queries = jobs.run_telematics_job(spark, ind, outd)
+    try:
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    for n in names:  # the restart reads the three new files as batch 2
+        assert commits(n) == ["0", "1", "2"], n
+    cars = spark.createDataFrame(rows, schema=schemas.CAR_REPORTS)
+    for n, got, op in zip(
+        names, read_telematics_sinks(spark, outd), (speed_radar, average_speed_fines, accident_reports)
+    ):
+        want = rows_bag(op(cars))
+        assert rows_bag(got) == want, n
+        assert sum(want.values()) > 0, f"{n}: degenerate"
 
 
 def test_exact_dedup_stream(spark, tmp_path):
@@ -186,12 +277,7 @@ def test_exact_dedup_stream(spark, tmp_path):
 @pytest.mark.slow
 def test_streaming_matches_batch_at_sf0001(spark, tmp_path):
     # all three telematics queries, 1000-row derived corpus, 5 micro-batches
-    from cloudcomputing_flink_application_spark.sources.derived import car_reports_from_events
-    from cloudcomputing_flink_application_spark.sources.readers import read_events
-    from tests.conftest import TESTDATA
-
-    cars = car_reports_from_events(read_events(spark, f"{TESTDATA}/sf0.001")).orderBy("time", "vid")
-    rows = [tuple(r) for r in cars.collect()]
+    rows = sf0001_car_rows(spark)
     chunks = [rows[j * 200:(j + 1) * 200] for j in range(5)]
     d = str(tmp_path / "cars_sf")
     write_files(d, ["".join(",".join(map(str, r)) + "\n" for r in c) for c in chunks])
@@ -202,12 +288,16 @@ def test_streaming_matches_batch_at_sf0001(spark, tmp_path):
     )
     batch_df = spark.createDataFrame(rows, schema=schemas.CAR_REPORTS)
     for sname, sfn, bfn in (
-        ("speed_sf", jobs.speed_radar_stream, speed_radar),
+        ("speed_sf", None, speed_radar),
         ("acc_sf", jobs.accident_reports_stream, accident_reports),
         ("avg_sf", jobs.average_speed_fines_stream, average_speed_fines),
     ):
-        out = run_stream(spark, sfn(stream), sname)
-        assert rows_set(out) == rows_set(bfn(batch_df)), sname
+        want = bfn(batch_df)
+        if sfn is None:  # Q-SPEED is a plain streaming frame
+            out = run_stream(spark, jobs.speed_radar_stream(stream), sname)
+        else:
+            out = run_tail_stream(spark, sfn, stream, want.schema, tmp_path, sname)
+        assert rows_bag(out) == rows_bag(want), sname
         assert out.count() > 0, f"{sname}: degenerate"
 
 
@@ -222,17 +312,39 @@ MULTI_TRAVERSAL = [
     (40, 11, 90, 0, 0, 0, 56, 8000),
 ]
 
+# Car 12: the first batch ends on a seg-52 row (t20, pos 4000) that is not
+# the max-pos 52 row (t0, older than the min-pos 56 row t10), so only the
+# tail's last-row member carries the 52 -> 56 transition into the next
+# batch.  The t30 report does not lower the seg-56 minimum, so its fire
+# repeats the t10 fire row for row: the batch operator emits it twice, and
+# the stream must subtract the t10 fire (which the tail rows alone
+# reproduce) once, as a multiset, not drop both.
+MULTI_TRAVERSAL_LAST_52 = [
+    (0, 12, 90, 0, 0, 0, 52, 5000),
+    (10, 12, 90, 0, 0, 0, 56, 9000),
+    (20, 12, 90, 0, 0, 0, 52, 4000),
+    (30, 12, 90, 0, 0, 0, 56, 9500),
+]
 
-def test_avgspd_stream_matches_batch_multi_traversal(spark, car_stream):
+
+def avgspd_stream_and_batch(spark, car_stream, tmp_path, rows, cut: int):
+    """Q-AVGSPD on ``rows`` as a stream split at ``cut`` and as a batch."""
+    stream = car_stream([rows[:cut], rows[cut:]])
+    batch = average_speed_fines(spark.createDataFrame(rows, schema=schemas.CAR_REPORTS))
+    out = run_tail_stream(spark, jobs.average_speed_fines_stream, stream, batch.schema, tmp_path, "avg_mt")
+    return rows_bag(out), rows_bag(batch)
+
+
+def test_avgspd_stream_matches_batch_multi_traversal(spark, car_stream, tmp_path):
     # Split mid-second-traversal: the running reduce state (max-pos 52 /
     # min-pos 56 / last seg) must survive the batch boundary.
-    stream = car_stream([MULTI_TRAVERSAL[:4], MULTI_TRAVERSAL[4:]])
-    out = run_stream(spark, jobs.average_speed_fines_stream(stream), "avg_mt")
-    batch = average_speed_fines(
-        spark.createDataFrame(MULTI_TRAVERSAL, schema=schemas.CAR_REPORTS)
-    )
-    expected = {(10, 20, 11, 0, 0, 894), (30, 40, 11, 0, 0, 447)}
-    assert rows_set(out) == rows_set(batch) == expected
+    out, batch = avgspd_stream_and_batch(spark, car_stream, tmp_path, MULTI_TRAVERSAL, 4)
+    assert out == batch == Counter([(10, 20, 11, 0, 0, 894), (30, 40, 11, 0, 0, 447)])
+
+
+def test_avgspd_stream_last_row_carries_transition(spark, car_stream, tmp_path):
+    out, batch = avgspd_stream_and_batch(spark, car_stream, tmp_path, MULTI_TRAVERSAL_LAST_52, 3)
+    assert out == batch == Counter([(0, 10, 12, 0, 0, 894)] * 2)
 
 
 TAXI_CSV_TIE = """7,2022-03-05 10:00:00,2022-03-05 10:20:00,1.0,1.0,1.0,N,1,1,1,5.0,0.5,0.5,0.0,0.0,0.3,5.0,0.0,0.0
@@ -252,13 +364,14 @@ def test_saturated_stream_tiebreak_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .csv(d)
     )
-    out = run_stream(spark, jobs.saturated_vendors_stream(stream), "sat_tie")
     batch = saturated_vendors(spark.read.schema(schemas.TAXI_TRIPS).csv(d))
+    out = run_tail_stream(spark, jobs.saturated_vendors_stream, stream, batch.schema, tmp_path, "sat_tie")
     expected = {
         (7, "2022-03-05 10:00:00", "2022-03-05 10:20:00", 2),
         (7, "2022-03-05 10:00:00", "2022-03-05 10:25:00", 2),
     }
-    assert rows_set(out) == rows_set(batch) == expected
+    assert rows_bag(out) == rows_bag(batch)
+    assert rows_set(out) == expected and out.count() == 2
 
 
 def test_minhash_dedup_stream_matches_batch(spark, tmp_path):
