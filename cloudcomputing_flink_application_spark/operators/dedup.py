@@ -41,8 +41,12 @@ COSINE_DUP = 0.4
 #: DataFrames, so they cannot unpersist after "the" action themselves — the
 #: action happens after they return, and the CacheManager dedups repeated
 #: plans.  Long-lived sessions processing many DIFFERENT corpora should call
-#: :func:`release_cached` (or ``spark.catalog.clearCache()``, which bench.py
-#: does between queries) so executor storage does not grow without bound.
+#: :func:`release_cached` so executor storage does not grow without bound.
+#: ``spark.catalog.clearCache()`` is NOT equivalent: it drops the persisted
+#: frames' cache entries but leaves this registry, and it frees no
+#: :func:`truncate_lineage` snapshot (local checkpoint blocks are RDD-level
+#: persists, reliable ones are files) — those go with ``release_cached()``
+#: or, for local blocks, JVM GC.
 #:
 #: The registry is PER-THREAD (ADVICE r8 low): every mark/release pair in
 #: the repo runs on the thread that persisted (a stream's per-batch release
@@ -52,7 +56,8 @@ COSINE_DUP = 0.4
 #: scoped release can only ever drop frames ITS OWN stream persisted,
 #: never interleave with another's.  The one contract this imposes:
 #: release on the thread that ran the operator (true at every call site;
-#: a thread that exits without releasing leaks only until clearCache).
+#: a thread that exits without releasing leaks its persisted frames until
+#: clearCache, and its truncate_lineage snapshots until GC or session end).
 _TLS = threading.local()
 
 
@@ -512,8 +517,7 @@ def minhash_lsh_dedup(documents: DataFrame) -> DataFrame:
     function exits, and the CacheManager dedups repeat calls on the same
     input by canonical plan.  Long-lived sessions running many DIFFERENT
     corpora should release entries between corpora with
-    :func:`release_cached` (targeted) or ``spark.catalog.clearCache()``
-    (what bench.py does per run).
+    :func:`release_cached` (see the registry note on ``clearCache()``).
     """
     # Materialize the expensive prep ONCE: tokset feeds the band self-join
     # (twice) and the ta/tb verify sides (twice more) — without persist the
@@ -783,8 +787,7 @@ def _verified_star_edges(documents: DataFrame) -> DataFrame:
     The O(n x bands) candidate generation both cluster operators share,
     composed from the shared star/verify helpers above.  Caching contract:
     same as minhash_lsh_dedup — entries are released by
-    :func:`release_cached` / ``spark.catalog.clearCache()``, not by this
-    function.
+    :func:`release_cached`, not by this function.
     """
     # Same persist rationale as minhash_lsh_dedup: the hashed token-set
     # frame feeds the band pipeline once and the ta/tb verify sides
@@ -980,17 +983,77 @@ def _unpersist_local_ckpts(spark, ids: set[int]) -> None:
 _CC_SNAPSHOT_LOCK = threading.Lock()
 
 
-class _CkptRelease:
-    """A release-registry shim for :func:`truncate_lineage`'s snapshot
-    blocks: ``release_cached`` pops registry entries and calls
-    ``unpersist()``, and a checkpointed frame's blocks are RDD-level
-    persists the DataFrame-level unpersist would miss."""
+def _truncate(reliable: bool, df: DataFrame) -> DataFrame:
+    """Checkpoint ``df``: reliable (FS snapshot) or lazy local.  Called
+    only under _CC_SNAPSHOT_LOCK via :func:`_truncate_tracked`."""
+    if reliable:
+        # Cache first: checkpoint() materializes with one job, then
+        # writes the snapshot with a second — persisted blocks make the
+        # second job a cache read instead of a full recompute.
+        df.persist()
+        try:
+            return df.checkpoint()
+        finally:
+            df.unpersist()
+    # LAZY local checkpoint (r14 optimization round, guide §1.2 "remove
+    # unnecessary passes"): eager=True ran one materialization job per
+    # truncate — 2 extra jobs per CC round whose only purpose was to fill
+    # the snapshot blocks the convergence action would fill anyway.
+    # With eager=False the round's single convergence action computes
+    # large+small once and the localCheckpoint machinery caches every
+    # partition as a side effect (LocalRDDCheckpointData backfills any
+    # partition the action skipped), so lineage is truncated exactly as
+    # before with one action per round instead of three.  The frames
+    # are deterministic (pure min/join algebra), so the lazy-checkpoint
+    # recompute caveat does not bite; the RELIABLE path above keeps
+    # eager persist+checkpoint — at cluster scale the FS snapshot must
+    # exist before anything builds on the frame.
+    return df.localCheckpoint(eager=False)
 
-    def __init__(self, spark, ids: set[int]):
-        self._spark, self._ids = spark, ids
+
+def _snapshots(spark, reliable: bool) -> set:
+    return _ckpt_entries(spark) if reliable else _local_ckpt_rdd_ids(spark)
+
+
+def _release_snapshots(spark, reliable: bool, dead: set) -> None:
+    if reliable:
+        _delete_ckpt_entries(spark, dead)
+    else:
+        _unpersist_local_ckpts(spark, dead)
+
+
+def _truncate_tracked(reliable: bool, df: DataFrame) -> tuple[DataFrame, set]:
+    """Truncate ``df`` and return it with the snapshots the truncation
+    added — the ledger entries a later release frees.
+
+    Snapshot-ledger diff window (r14, ADVICE r13): the snapshot sets are
+    before/after diffs of the context-wide ledger, so a CONCURRENT
+    checkpoint from another thread of the same SparkContext landing
+    inside the window would be diffed in and later released even though
+    checkpointed RDDs are non-recomputable.  The module lock serializes
+    every window in this module (connected_components and
+    truncate_lineage are the repo's only checkpoint callers); callers
+    checkpointing on other threads outside this module are outside the
+    guard and must not run concurrently with them."""
+    spark = df.sparkSession
+    with _CC_SNAPSHOT_LOCK:
+        pre = _snapshots(spark, reliable)
+        out = _truncate(reliable, df)
+        return out, _snapshots(spark, reliable) - pre
+
+
+class _CkptRelease:
+    """A release-registry shim for :func:`truncate_lineage`'s snapshots:
+    ``release_cached`` pops registry entries and calls ``unpersist()``,
+    and a checkpoint is neither a cache entry nor freed by the
+    DataFrame-level unpersist — local snapshots are RDD-level persisted
+    blocks, reliable ones are files under the checkpoint dir."""
+
+    def __init__(self, spark, reliable: bool, snapshots: set):
+        self._spark, self._reliable, self._snapshots = spark, reliable, snapshots
 
     def unpersist(self) -> None:
-        _unpersist_local_ckpts(self._spark, self._ids)
+        _release_snapshots(self._spark, self._reliable, self._snapshots)
 
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
@@ -1008,29 +1071,22 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
     not spend its time re-walking their description — the same class as
     the r13 ``maxPlanStringLength`` fix, one layer deeper.
 
-    Same reliability dichotomy as ``connected_components._truncate``:
-    RELIABLE ``checkpoint()`` when the session has a checkpoint dir (a
-    lost executor replays from the FS snapshot; the returned frame's
-    snapshot outlives the call, subject to the cleaner conf / session
-    teardown — the CC contract), lazy ``localCheckpoint`` otherwise
-    (executor-local blocks, fine on local[n]); the local blocks are
-    registered in the module release registry so ``release_cached()`` /
-    module teardown frees them (the r12 leak class).  The input must be
+    Same reliability dichotomy and snapshot ledger as
+    ``connected_components`` (:func:`_truncate_tracked`): RELIABLE
+    ``checkpoint()`` when the session has a checkpoint dir (a lost
+    executor replays from the FS snapshot), lazy ``localCheckpoint``
+    otherwise (executor-local blocks, fine on local[n]).  Either way the
+    snapshot is registered in the module release registry, so
+    ``release_cached()`` deletes the snapshot dir or frees the local
+    blocks (the r12 leak class); ``spark.catalog.clearCache()`` frees
+    neither.  The input must be
     deterministic (every caller here derives from parquet scans by pure
     algebra) — the lazy-checkpoint recompute caveat documented at the CC
     site."""
     spark = df.sparkSession
-    if spark.sparkContext.getCheckpointDir() is not None:
-        df.persist()
-        try:
-            return df.checkpoint()
-        finally:
-            df.unpersist()
-    with _CC_SNAPSHOT_LOCK:
-        pre = _local_ckpt_rdd_ids(spark)
-        out = df.localCheckpoint(eager=False)
-        new = _local_ckpt_rdd_ids(spark) - pre
-    _frames().append(_CkptRelease(spark, new))
+    reliable = spark.sparkContext.getCheckpointDir() is not None
+    out, snapshots = _truncate_tracked(reliable, df)
+    _frames().append(_CkptRelease(spark, reliable, snapshots))
     return out
 
 
@@ -1084,60 +1140,11 @@ def connected_components(
     ``round_log`` (optional): a list the loop appends its 1-based round
     index to — the rounds run EAGERLY (one convergence action each), so
     on return ``len(round_log)`` is the executed round count.  Pure
-    instrumentation for the O(log n) claim (scaling_bench purge-100x).
+    instrumentation for the O(log n) claim (SCALING.md purge-100x; its
+    harness, ``scaling_bench.py``, is at commit 9619da7).
     """
     spark = edges.sparkSession
     reliable = spark.sparkContext.getCheckpointDir() is not None
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        # NOTE: called only under _CC_SNAPSHOT_LOCK via _truncate_tracked.
-        if reliable:
-            # Cache first: checkpoint() materializes with one job, then
-            # writes the snapshot with a second — persisted blocks make the
-            # second job a cache read instead of a full recompute.
-            df.persist()
-            try:
-                return df.checkpoint()
-            finally:
-                df.unpersist()
-        # LAZY local checkpoint (r14 optimization round, guide §1.2 "remove
-        # unnecessary passes"): eager=True ran one materialization job per
-        # truncate — 2 extra jobs per round whose only purpose was to fill
-        # the snapshot blocks the convergence action would fill anyway.
-        # With eager=False the round's single convergence action computes
-        # large+small once and the localCheckpoint machinery caches every
-        # partition as a side effect (LocalRDDCheckpointData backfills any
-        # partition the action skipped), so lineage is truncated exactly as
-        # before with one action per round instead of three.  The frames
-        # are deterministic (pure min/join algebra), so the lazy-checkpoint
-        # recompute caveat does not bite; the RELIABLE path above keeps
-        # eager persist+checkpoint — at cluster scale the FS snapshot must
-        # exist before anything builds on the frame.
-        return df.localCheckpoint(eager=False)
-
-    def _snapshots() -> set:
-        return _ckpt_entries(spark) if reliable else _local_ckpt_rdd_ids(spark)
-
-    def _release_dead(dead: set) -> None:
-        if reliable:
-            _delete_ckpt_entries(spark, dead)
-        else:
-            _unpersist_local_ckpts(spark, dead)
-
-    def _truncate_tracked(df: DataFrame) -> tuple[DataFrame, set]:
-        # Snapshot-ledger diff window (r14, ADVICE r13): the dead-
-        # snapshot sets are before/after diffs of the context-wide
-        # ledger, so a CONCURRENT checkpoint from another thread of the
-        # same SparkContext landing inside the window would be diffed in
-        # and later unpersisted even though checkpointed RDDs are
-        # non-recomputable.  The module lock serializes every window in
-        # this module (CC is the repo's only localCheckpoint caller);
-        # callers checkpointing on other threads outside this module are
-        # outside the guard and must not run concurrently with CC.
-        with _CC_SNAPSHOT_LOCK:
-            pre = _snapshots()
-            out = _truncate(df)
-            return out, _snapshots() - pre
 
     def _edge_checksum(df: DataFrame) -> tuple:
         # Order-independent edge-set fingerprint: (count, XOR of per-row
@@ -1155,6 +1162,7 @@ def connected_components(
 
     u, v = edges.columns[0], edges.columns[1]
     cur, cur_snaps = _truncate_tracked(
+        reliable,
         edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -1176,6 +1184,7 @@ def connected_components(
         # holds <= |nbrs| rows instead of the deduped set (bounded, one
         # output row per nbrs row).
         large, large_snaps = _truncate_tracked(
+            reliable,
             nbrs.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
             .select(
@@ -1192,6 +1201,7 @@ def connected_components(
         )
         omins = oriented.groupBy("u").agg(F.min("v").alias("_mn"))
         small, small_snaps = _truncate_tracked(
+            reliable,
             oriented.join(omins, "u")
             .select(F.col("v").alias("u"), F.col("_mn").alias("v"))
             .union(omins.select("u", F.col("_mn").alias("v")))
@@ -1222,7 +1232,7 @@ def connected_components(
         # intermediate large-star's (small is checkpointed, so nothing
         # replays through them anymore).  Same release on both paths —
         # FS snapshot dirs when reliable, localCheckpoint blocks when not.
-        _release_dead(cur_snaps | large_snaps)
+        _release_snapshots(spark, reliable, cur_snaps | large_snaps)
         cur_snaps = small_snaps
         cur = small
         if converged:

@@ -1290,7 +1290,7 @@ def _dup_span_starts(documents: DataFrame, w: int) -> DataFrame:
     headers — one hash carrying millions of rows, precisely the signal
     this operator exists to find) became its own straggler.  The window
     rows are ``persist()``-ed (same contract as the MinHash family —
-    released by ``dedup.release_cached`` / ``clearCache``) so the count
+    released by ``dedup.release_cached``) so the count
     side and the probe side share one explode instead of recomputing the
     md5 pipeline.
     """
@@ -1533,7 +1533,7 @@ def span_pass(documents: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
     and scrub; every per-key exchange is doc_id (high-cardinality,
     uniform).  Measured at sf0.1: composed 2.44 s -> see
     OPTIMIZATION_r14.md.  Caller-releases contract unchanged
-    (``dedup.release_cached`` / ``clearCache``).
+    (``dedup.release_cached``).
     """
     starts = _persist(_dup_span_starts(documents, w))
     return dup_span_stats(documents, w, starts=starts).join(
@@ -1990,7 +1990,7 @@ def training_prep(
     # three consumers read the kept docs (the purge's token-set prep and
     # both branches of the packing tail) — unpersisted, the whole clean
     # plan re-ran per consumer (r11 simplify pass).  Caching contract as
-    # everywhere: released by dedup.release_cached()/clearCache().
+    # everywhere: released by dedup.release_cached().
     kept_docs = _persist(
         documents.join(
             flags.filter(F.col("kept")).select("doc_id", "split"), "doc_id"

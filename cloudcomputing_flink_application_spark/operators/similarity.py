@@ -1037,7 +1037,7 @@ def build_ivf_index(
     """
     from cloudcomputing_flink_application_spark.streaming.jobs import (
         _acquire_forget_locks,
-        _prune_stale_batch_partitions,
+        _drop_partitions,
         _recover_compact,
         _refuse_uncommitted,
         _release_forget_locks,
@@ -1080,7 +1080,7 @@ def build_ivf_index(
             .partitionBy("batch_id")
             .parquet(asg_dir)
         )
-        _prune_stale_batch_partitions(spark, f"{index_root}/drift")
+        _drop_partitions(spark, f"{index_root}/drift")
         stats = assignment_stats(spark.read.parquet(asg_dir))
         stats.write.mode("overwrite").parquet(f"{index_root}/ref_stats")
         # Record the build's refinement depth in the artifact: a

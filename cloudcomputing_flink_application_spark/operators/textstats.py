@@ -956,7 +956,7 @@ def corpus_profile(documents: DataFrame) -> DataFrame:
     per_doc = _profile_per_doc(documents)
     # ONE scan of the corpus builds the histogram; both consumers below
     # (the per-source rollup and the rank-rule quantiles) read the tiny
-    # cached frame.  Released by dedup.release_cached()/clearCache().
+    # cached frame.  Released by dedup.release_cached().
     hist = _persist(
         per_doc.groupBy("source", "len").agg(
             F.count("*").cast("long").alias("cnt"),

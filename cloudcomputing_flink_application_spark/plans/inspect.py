@@ -39,10 +39,16 @@ def distinct_exchange_count(df: DataFrame, kind: str = "hashpartitioning") -> in
     its InMemoryRelation, so one real exchange can appear once per
     consumer per nesting level in the string.  ``plan_id`` is stable
     across renders of the same operator, so deduping on it counts the
-    exchanges that can actually execute."""
+    exchanges that can actually execute.
+
+    The id is the last ``[plan_id=N]`` on the exchange's own line, so
+    brackets inside the partitioning expressions (``arr#3[0]``) do not
+    hide it.  A plan that has ``Exchange <kind>`` but no id to read
+    raises, instead of counting 0 and passing a budget vacuously."""
     import re
 
     plan = physical_plan(df)
-    return len(
-        set(re.findall(rf"Exchange {kind}[^\[]*\[plan_id=(\d+)\]", plan))
-    )
+    ids = set(re.findall(rf"Exchange {kind}.*\[plan_id=(\d+)\]", plan))
+    if not ids and f"Exchange {kind}" in plan:
+        raise ValueError(f"no plan_id on any 'Exchange {kind}' in:\n{plan}")
+    return len(ids)

@@ -120,17 +120,6 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every driver parquet table from ``sf_dir`` (TESTDATA.md)."""
-    out = {
-        name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for name in schemas.DRIVER_TABLES
-        if name != "events"
-    }
-    out["events"] = read_events(spark, sf_dir)
-    return out
-
-
 def read_jsonl(
     spark: SparkSession, path: str, schema, streaming: bool = False
 ) -> DataFrame:

@@ -1,4 +1,5 @@
-"""Structured Streaming variants of the five reference queries.
+"""Structured Streaming variants of the five reference queries, and the
+incremental (``foreachBatch``) jobs of the LLM-data operators.
 
 The reference runs these as always-on Flink DataStream jobs; here the same
 logical plans run incrementally:
@@ -7,11 +8,16 @@ logical plans run incrementally:
 - Q-CONG: watermarked 1-day tumbling window aggregation (append mode) —
   Spark's partial-agg + state store replaces the reference's parallelism-1
   ``windowAll`` (CongestionArea.java:60) with a fully parallel plan.
-- Q-ACC / Q-AVGSPD / Q-SAT: ``foreachBatch`` queries that run the
-  oracle-pinned batch operators (``operators.telematics``,
-  ``operators.taxi``) over each key's carried tail plus the new rows, with
-  exactly-once sinks from the offset log plus idempotent per-batch writes
-  (Structured Streaming, SIGMOD 2018).
+- Q-ACC / Q-AVGSPD / Q-SAT: the oracle-pinned batch operators
+  (``operators.telematics``, ``operators.taxi``) over each key's carried
+  tail plus the new rows.
+
+Every ``foreachBatch`` job — the three tail queries and the dedup, span,
+decontamination, cleaning, profiling and ANN-index jobs — is a step
+function run by one driver, :func:`_run_incremental`, which owns the
+exactly-once contract and states it.  A job declares its sinks and state
+stores (:class:`_Store`); its step reads and writes them only through the
+batch handle the driver passes it.
 
 Watermark policy: ``0 seconds`` everywhere — the reference's
 AscendingTimestampExtractor admits zero lateness (SURVEY.md §2.3); late rows
@@ -26,6 +32,7 @@ directory and returns their handles; each keeps its own checkpoint.
 from __future__ import annotations
 
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -78,6 +85,237 @@ def congestion_daily_stream(trips: DataFrame) -> DataFrame:
     )
 
 
+# --- the incremental driver ---------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Store:
+    """A sink or state store of an incremental job, as the driver sees it.
+
+    - ``path``: the store root.
+    - ``first``: the stream's first partition; batch ``b`` writes partition
+      ``b + first``.  It is 1 for the index stores whose ``batch_id=0`` is
+      the batch build pass's foundation, which the stream never touches.
+    - ``horizon``: how many partitions before the current one a batch reads
+      and keeps (``current``: counting the current one); older stream
+      partitions are pruned.  ``None`` keeps every partition.
+    - ``locked``: a forget, build or compaction lock on the store fences
+      the job (:func:`_forget_guard`).
+    - ``layout``: ``"parquet"`` — ``batch_id=K`` partitions written with
+      dynamic partition overwrite; ``"snapshot"`` — ``batch_id=K`` dirs each
+      written whole (an empty one included), and a batch requires the
+      previous one; ``"csv"`` — flat headerless ``part-K`` files, so a plain
+      ``spark.read.csv(path)`` sees every batch's rows with the query's own
+      columns.
+    """
+
+    path: str
+    first: int = 0
+    horizon: int | None = None
+    current: bool = False
+    locked: bool = False
+    layout: str = "parquet"
+
+
+class _Batch:
+    """One micro-batch's handle on its job's stores."""
+
+    def __init__(self, spark, batch_id: int, checkpoint_dir: str):
+        self.spark, self.id, self._checkpoint_dir = spark, batch_id, checkpoint_dir
+
+    def read(self, store: _Store, schema=None) -> DataFrame | None:
+        """The store's committed partitions before this batch's, within its
+        horizon (``None`` when the store has no committed data).
+
+        A snapshot store yields the previous batch's partition (``None`` at
+        batch 0), read with ``schema`` when given, and raises when it is
+        missing: the state it carried is lost."""
+        p = self.id + store.first
+        if store.layout == "snapshot":
+            if self.id == 0:
+                return None
+            prev = f"{store.path}/batch_id={p - 1}"
+            if not _hadoop_path_exists(self.spark, prev):
+                raise RuntimeError(
+                    f"{prev} is missing: the state carried out of batch "
+                    f"{self.id - 1} is lost, so batch {self.id} cannot be "
+                    "computed exactly"
+                )
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            return reader.parquet(prev)
+        if not _committed_batch_data_exists(self.spark, store.path):
+            return None
+        rows = self.spark.read.parquet(store.path).filter(F.col("batch_id") < p)
+        if store.horizon is not None:
+            rows = rows.filter(F.col("batch_id") >= p + store.current - store.horizon)
+        return rows
+
+    def with_prior(self, store: _Store, part: DataFrame) -> DataFrame:
+        """``part`` plus the store's :meth:`read` rows, in ``part``'s columns."""
+        prior = self.read(store)
+        return part if prior is None else part.unionByName(prior.select(*part.columns))
+
+    def write(self, store: _Store, df: DataFrame) -> None:
+        """Write ``df`` as this batch's partition of ``store``, replacing
+        whatever an earlier attempt of the batch wrote there."""
+        p = self.id + store.first
+        if store.layout == "csv":
+            _write_csv_part(df, store.path, p, f"{self._checkpoint_dir}/staging")
+        elif store.layout == "snapshot":
+            df.write.mode("overwrite").parquet(f"{store.path}/batch_id={p}")
+        else:
+            _write_batch_partition(df, p, store.path)
+
+
+def _run_incremental(source: DataFrame, checkpoint_dir: str, stores, step):
+    """Start ``source`` as a ``foreachBatch`` query that runs
+    ``step(batch, handle)`` on every micro-batch, with exactly-once sinks.
+
+    The contract is Structured Streaming's (SIGMOD 2018): the offset log in
+    ``checkpoint_dir`` fixes each batch's input, so a batch that fails or
+    is cut before its commit re-runs on the same rows under the same
+    ``batch_id``.  Exactly-once output then needs every write to be
+    idempotent per ``batch_id`` and every read to see only what earlier
+    batches committed.  The driver provides both, for every store in
+    ``stores``, before and around ``step``:
+
+    - **Forget lock.** A lock marker on a ``locked`` store (a compliance
+      deletion, index rebuild or compaction in progress or crashed) stops
+      the query; absent one, a half-done store swap is healed first, so
+      crash debris never reads as an empty store (:func:`_forget_guard`).
+    - **Batch-0 prune.** Batch 0 deletes every stream partition (``>=
+      first``): a run under another checkpoint renumbers from 0, and its
+      higher partitions would otherwise linger as stale rows.  On a replay
+      of batch 0 no later partition exists yet.
+    - **Horizon prune.** At batch start, stream partitions older than the
+      store's horizon are deleted.  The read below never reaches under
+      that cutoff, so a replayed batch still sees all it read the first
+      time.
+    - **Read.** ``handle.read(store)`` returns only partitions below the
+      current one, within the horizon, and ``None`` when the store holds
+      no committed data file.  So a replay never sees its own half-written
+      partition, and a first batch that crashed mid-write (leaving only
+      ``_temporary`` content) reads as a first batch instead of wedging
+      every retry.  Any other read failure propagates.
+    - **Write.** ``handle.write(store, df)`` replaces the batch's own
+      partition (dynamic partition overwrite, a whole-dir overwrite, or a
+      staged rename for a CSV part), so a replay never duplicates rows.
+
+    Each store's horizon is validated here, when the job is wired, not in
+    the first micro-batch.  The step holds the job's own logic only.
+    """
+    for store in stores:
+        _check_horizon(store.horizon)
+    locked = [s.path for s in stores if s.locked]
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        _forget_guard(spark, locked)
+        for s in stores:
+            if batch_id == 0:
+                _drop_stale(spark, s)
+            if s.horizon is not None:
+                cutoff = batch_id + s.first + s.current - s.horizon
+                _drop_partitions(spark, s.path, lo=s.first, below=cutoff)
+        step(batch, _Batch(spark, batch_id, checkpoint_dir))
+
+    return (
+        source.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _drop_stale(spark, store: _Store) -> None:
+    """Delete every stream partition of ``store``; a CSV sink also loses a
+    file-sink log (``_spark_metadata``) an earlier sink may have left,
+    which would hide every part file not listed in it."""
+    if store.layout != "csv":
+        _drop_partitions(spark, store.path, lo=store.first)
+        return
+    for stale in (f"{store.path}/part-*", f"{store.path}/_spark_metadata"):
+        fs, pattern = _fs_path(spark, stale)
+        for st in fs.globStatus(pattern) or []:
+            fs.delete(st.getPath(), True)
+
+
+def _check_horizon(horizon_batches: int | None) -> None:
+    """Fail fast on a meaningless horizon: 0 or negative would silently
+    disable every cross-batch probe while pruning state at or ahead of the
+    current batch — a job that 'succeeds' with globally undeduped output."""
+    if horizon_batches is not None and horizon_batches < 1:
+        raise ValueError(
+            f"horizon_batches must be >= 1 (got {horizon_batches}); "
+            "omit it for unbounded state"
+        )
+
+
+def _fs_path(spark, path: str):
+    jvm = spark._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _hadoop_path_exists(spark, path: str) -> bool:
+    """Explicit FS existence probe (works for local paths and cluster FS)."""
+    fs, p = _fs_path(spark, path)
+    return bool(fs.exists(p))
+
+
+def _batch_partitions(spark, path: str) -> list:
+    """``(K, Path)`` for every ``batch_id=K`` partition dir under ``path``."""
+    fs, pattern = _fs_path(spark, path.rstrip("/") + "/batch_id=*")
+    return [
+        (int(st.getPath().getName().split("=", 1)[1]), st.getPath())
+        for st in fs.globStatus(pattern) or []
+    ]
+
+
+def _drop_partitions(spark, path: str, lo: int = 0, below: int | None = None) -> None:
+    """Delete the ``batch_id=K`` partitions under ``path`` with
+    ``lo <= K < below`` (every one from ``lo`` up when ``below`` is None)."""
+    fs, _ = _fs_path(spark, path)
+    for k, p in _batch_partitions(spark, path):
+        if k >= lo and (below is None or k < below):
+            fs.delete(p, True)
+
+
+def _committed_batch_data_exists(spark, path: str) -> bool:
+    """True iff ``path`` holds at least one COMMITTED batch-partition data
+    file (``batch_id=*/part-*``): a dir holding only a crashed write's
+    ``_temporary`` content reads as empty (see :func:`_run_incremental`)."""
+    fs, pattern = _fs_path(spark, path.rstrip("/") + "/batch_id=*/part-*")
+    matches = fs.globStatus(pattern)
+    return matches is not None and len(matches) > 0
+
+
+def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """Rows land under ``batch_id=<N>/``; a rewrite of the same batch
+    OVERWRITES only that partition (dynamic partition overwrite)."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _write_csv_part(df: DataFrame, path: str, batch_id: int, staging: str) -> None:
+    """Write ``df`` as one headerless CSV file ``<path>/part-<batch_id>``,
+    staged under ``staging`` and renamed into place over any earlier one."""
+    spark = df.sparkSession
+    df.coalesce(1).write.mode("overwrite").csv(staging)
+    fs, dst = _fs_path(spark, f"{path}/part-{batch_id}")
+    _, written = _fs_path(spark, f"{staging}/part-*")
+    fs.mkdirs(dst.getParent())
+    fs.delete(dst, False)
+    for st in fs.globStatus(written) or []:
+        if not fs.rename(st.getPath(), dst):
+            raise IOError(f"rename {st.getPath()} -> {dst} failed")
+    fs.delete(written.getParent(), True)
+
+
 # --- Q-ACC / Q-AVGSPD / Q-SAT: batch operators over a carried tail --------------
 #
 # Each of these queries is causal per key: an output row depends only on rows
@@ -122,73 +360,31 @@ def _saturated_tail(trips: DataFrame) -> DataFrame:
     return _last_rows(trips, "vendor_id", ["tpep_pickup_datetime", "tpep_dropoff_datetime"], 1)
 
 
-def _write_csv_part(df: DataFrame, path: str, batch_id: int, staging: str) -> None:
-    """Write ``df`` as one headerless CSV file ``<path>/part-<batch_id>``.
-
-    The file sits flat in ``path``, so a plain ``spark.read.csv(path)`` sees
-    every batch's rows with the query's own columns.  A replay of the batch
-    replaces the file, so at-least-once delivery never duplicates rows."""
-    spark = df.sparkSession
-    df.coalesce(1).write.mode("overwrite").csv(staging)
-    fs, dst = _fs_path(spark, f"{path}/part-{batch_id}")
-    _, written = _fs_path(spark, f"{staging}/part-*")
-    fs.mkdirs(dst.getParent())
-    fs.delete(dst, False)
-    for st in fs.globStatus(written) or []:
-        if not fs.rename(st.getPath(), dst):
-            raise IOError(f"rename {st.getPath()} -> {dst} failed")
-    fs.delete(written.getParent(), True)
-
-
 def _run_tail_stream(source: DataFrame, op, tail_of, path: str, checkpoint_dir: str):
-    """Start a ``foreachBatch`` query that runs the batch operator ``op``
-    incrementally over ``source``.
+    """Start a query that runs the batch operator ``op`` incrementally over
+    ``source``.
 
-    Batch ``b`` emits ``op(tail ∪ batch).exceptAll(op(tail))``, where the tail
-    is ``tail_of`` applied to the previous batch's ``tail ∪ batch``.  It
-    writes its rows with :func:`_write_csv_part` and its new tail as a full
-    parquet snapshot ``<checkpoint_dir>/tail/batch_id=<b>``; both are
-    idempotent per batch, so the offset log plus these writes give
-    exactly-once sinks (Structured Streaming's recovery contract).
-    Snapshots older than ``b - 1`` are pruned: a replay of ``b`` reads
-    snapshot ``b - 1``.
+    Batch ``b`` emits ``op(tail ∪ batch).exceptAll(op(tail))`` as CSV part
+    ``<path>/part-<b>``, where the tail is ``tail_of`` applied to the
+    previous batch's ``tail ∪ batch``.  The tail is a snapshot store with
+    horizon 1 under ``<checkpoint_dir>/tail``: a replay of ``b`` reads
+    snapshot ``b - 1``, and a lost one raises.
     """
-    tails = f"{checkpoint_dir}/tail"
+    sink = _Store(path, layout="csv")
+    tails = _Store(f"{checkpoint_dir}/tail", horizon=1, layout="snapshot")
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch_id == 0:
-            # a run under another checkpoint may have left sink files, a
-            # file-sink log or tails; a replay of batch 0 finds no later
-            # file of this run
-            _prune_stale_batch_partitions(spark, tails)
-            for stale in (f"{path}/part-*", f"{path}/_spark_metadata"):
-                fs, pattern = _fs_path(spark, stale)
-                for st in fs.globStatus(pattern) or []:
-                    fs.delete(st.getPath(), True)
-            tail = spark.createDataFrame([], batch.schema)
-        else:
-            prev = f"{tails}/batch_id={batch_id - 1}"
-            if not _hadoop_path_exists(spark, prev):
-                raise RuntimeError(
-                    f"{prev} is missing: the carried tail of batch {batch_id - 1} "
-                    f"is lost, so batch {batch_id} cannot be computed exactly"
-                )
-            tail = spark.read.schema(batch.schema).parquet(prev)
+    def step(batch: DataFrame, ctx: _Batch) -> None:
+        tail = ctx.read(tails, schema=batch.schema)
+        if tail is None:
+            tail = ctx.spark.createDataFrame([], batch.schema)
         cur = tail.unionByName(batch).persist()
         try:
-            fresh = op(cur).exceptAll(op(tail))
-            _write_csv_part(fresh, path, batch_id, f"{checkpoint_dir}/staging")
-            tail_of(cur).write.mode("overwrite").parquet(f"{tails}/batch_id={batch_id}")
+            ctx.write(sink, op(cur).exceptAll(op(tail)))
+            ctx.write(tails, tail_of(cur))
         finally:
             cur.unpersist()
-        _prune_batch_partitions_before(spark, tails, batch_id - 1)
 
-    return (
-        source.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(source, checkpoint_dir, [sink, tails], step)
 
 
 def accident_reports_stream(cars: DataFrame, path: str, checkpoint_dir: str):
@@ -231,34 +427,6 @@ def exact_dedup_stream(documents: DataFrame) -> DataFrame:
     ).dropDuplicates(["text_md5"])
 
 
-def _hadoop_path_exists(spark, path: str) -> bool:
-    """Explicit FS existence probe (works for local paths and cluster FS)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _committed_batch_data_exists(spark, path: str) -> bool:
-    """True iff ``path`` holds at least one COMMITTED batch-partition data
-    file (``batch_id=*/part-*``).
-
-    A bare directory-exists probe permanently wedges the stream when a
-    crash during the FIRST batch's write leaves the directory with only
-    uncommitted content (``_temporary``): every replay would see the dir,
-    attempt parquet schema inference over zero committed files, and fail
-    again.  Globbing for committed task output makes that case read as
-    "first batch" and recover; any real committed state still matches.
-    """
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/batch_id=*/part-*"
-    )
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(pattern)
-    return matches is not None and len(matches) > 0
-
-
 def _refuse_unpartitioned_store(spark, path: str) -> None:
     """Refuse to operate on a store whose data files sit at the directory
     ROOT — the pre-r9 PQ codes layout (written unpartitioned before the
@@ -270,11 +438,8 @@ def _refuse_unpartitioned_store(spark, path: str) -> None:
     every row remains (r9 review catch).  Migration is the store's own
     encode pass: ``pq-index --encode-only`` over the FULL corpus
     statically rewrites it batch_id-partitioned."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/part-*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(pattern)
-    if matches is not None and len(matches) > 0:
+    fs, pattern = _fs_path(spark, path.rstrip("/") + "/part-*")
+    if fs.globStatus(pattern):
         raise RuntimeError(
             f"{path} holds data files at the directory root (the "
             "unpartitioned pre-batch_id layout): mixing layouts would "
@@ -282,75 +447,6 @@ def _refuse_unpartitioned_store(spark, path: str) -> None:
             "Re-encode the full corpus (pq-index --encode-only) to "
             "rewrite the store batch_id-partitioned, then re-run."
         )
-
-
-def _prune_stale_batch_partitions(spark, path: str) -> None:
-    """Delete every ``batch_id=*`` partition under ``path``.
-
-    Called on batch 0 only: dynamic partition overwrite replaces a
-    replayed batch's OWN partition but never removes partitions a prior
-    run wrote under a different checkpoint (fresh-checkpoint reruns
-    renumber batches from 0, so a previous run's higher batch_ids would
-    linger as stale state and duplicate rows).  On a same-checkpoint
-    replay of batch 0 no later partitions exist yet, so the prune is a
-    no-op beyond the partition the overwrite would replace anyway.
-    """
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/batch_id=*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    matches = fs.globStatus(pattern)
-    for st in matches or []:
-        fs.delete(st.getPath(), True)
-
-
-def _prune_batch_partitions_before(spark, path: str, cutoff: int) -> None:
-    """Delete ``batch_id=K`` partitions with K < ``cutoff`` — the aging
-    step of a horizoned state store.  Called at the START of a batch, so
-    an at-least-once replay of the current batch still sees every
-    partition its probe window needs (the probe never reads below the
-    same cutoff)."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/batch_id=*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    for st in fs.globStatus(pattern) or []:
-        name = st.getPath().getName()
-        if int(name.split("=", 1)[1]) < cutoff:
-            fs.delete(st.getPath(), True)
-
-
-def _check_horizon(horizon_batches: int | None) -> None:
-    """Fail fast on a meaningless horizon: 0 or negative would silently
-    disable every cross-batch probe (empty window) while pruning state at
-    or ahead of the current batch — a job that 'succeeds' with globally
-    undeduped output."""
-    if horizon_batches is not None and horizon_batches < 1:
-        raise ValueError(
-            f"horizon_batches must be >= 1 (got {horizon_batches}); "
-            "omit it for unbounded state"
-        )
-
-
-def _horizon_probe(store: DataFrame, batch_id: int, horizon: int | None) -> DataFrame:
-    """The state-store read of batch ``batch_id``: all PRIOR batches, or
-    only the trailing ``horizon`` of them when a horizon is set."""
-    probe = store.filter(F.col("batch_id") < F.lit(batch_id))
-    if horizon is not None:
-        probe = probe.filter(F.col("batch_id") >= F.lit(batch_id - horizon))
-    return probe
-
-
-def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
-    """Idempotent micro-batch sink: rows land under ``batch_id=<N>/`` and a
-    replay of the same batch OVERWRITES only that partition (dynamic
-    partition overwrite), so at-least-once ``foreachBatch`` delivery never
-    duplicates output rows."""
-    (
-        df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
 
 
 def run_minhash_dedup_stream(
@@ -379,25 +475,10 @@ def run_minhash_dedup_stream(
     (minhash_lsh_dedup / minhash_cluster_dedup) exactly as a production
     ingest dedup splits the work.
 
-    Fault tolerance: ``foreachBatch`` is at-least-once, so both sinks are
-    keyed by ``batch_id`` (partition column) and written with DYNAMIC
-    partition overwrite — a replayed batch replaces its own partitions
-    instead of appending duplicates, and the bucket-store probe reads only
-    ``batch_id < current``, so a replay sees exactly the pre-batch state
-    even if the failed attempt half-wrote its partition.  A missing bucket
-    store is detected with an explicit filesystem glob for COMMITTED
-    batch-partition data files (a bare dir-exists probe would wedge the
-    stream forever if a first-batch crash left only ``_temporary``
-    content); any OTHER read failure (corruption, permissions, schema
-    drift) propagates instead of being silently treated as "first batch"
-    (which would drop all cross-batch state and emit wrong is_dup=false
-    flags).  On batch 0 both sinks prune stale ``batch_id=*`` partitions
-    left by a prior run under a different checkpoint.
-
     ``horizon_batches`` bounds the state by TIME: the bucket-store probe
     reads only the trailing ``horizon_batches`` micro-batches, and older
-    partitions are deleted at the start of each batch — state becomes
-    O(docs-in-horizon x bands) instead of O(all docs ever).  A micro-batch
+    partitions are pruned — state becomes O(docs-in-horizon x bands)
+    instead of O(all docs ever).  A micro-batch
     is the stream's time quantum (with a processing-time trigger the
     horizon IS a wall-clock window; this is the partitioned-parquet
     analogue of ``dropDuplicatesWithinWatermark`` aging its hash state
@@ -405,25 +486,14 @@ def run_minhash_dedup_stream(
     dedup-WITHIN-horizon: a doc is flagged iff a bucket-mate exists in
     the horizon window — the contract production ingest dedup actually
     wants once the corpus outlives executor state (streaming == batch-
-    over-the-window pinned in tests/test_streaming.py).  Aging at the
-    batch START keeps replays exact: the probe never reads below the
-    same cutoff the prune deletes.
+    over-the-window pinned in tests/test_streaming.py).
     """
     from cloudcomputing_flink_application_spark.operators.dedup import band_rows
 
-    _check_horizon(horizon_batches)
+    out = _Store(output_dir)
+    bands = _Store(bands_dir, horizon=horizon_batches, locked=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _forget_guard(spark, [bands_dir])
-        if batch_id == 0:
-            # Fresh-checkpoint rerun over a dirty sink: batches renumber
-            # from 0, so partitions a previous run wrote would linger.
-            _prune_stale_batch_partitions(spark, output_dir)
-            _prune_stale_batch_partitions(spark, bands_dir)
-        elif horizon_batches is not None:
-            _prune_batch_partitions_before(
-                spark, bands_dir, batch_id - horizon_batches
-            )
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         b = band_rows(batch_df).persist()
         try:
             # bucket-min via groupBy + join back (partial agg on a possibly
@@ -434,11 +504,11 @@ def run_minhash_dedup_stream(
                 .filter(F.col("doc_id") > F.col("_m"))
                 .select("doc_id")
             )
-            if _committed_batch_data_exists(spark, bands_dir):
-                seen = _horizon_probe(
-                    spark.read.parquet(bands_dir), batch_id, horizon_batches
-                ).select("band", "key")
-                prior = b.join(seen, ["band", "key"], "leftsemi").select("doc_id")
+            seen = ctx.read(bands)
+            if seen is not None:
+                prior = b.join(
+                    seen.select("band", "key"), ["band", "key"], "leftsemi"
+                ).select("doc_id")
                 dup_ids = within.union(prior)
             else:  # first batch: no bucket store yet
                 dup_ids = within
@@ -453,7 +523,7 @@ def run_minhash_dedup_stream(
                     "doc_id", F.coalesce(F.col("_d"), F.lit(False)).alias("is_dup")
                 )
             )
-            _write_batch_partition(flags, batch_id, output_dir)
+            ctx.write(out, flags)
             # Store PER-DOC band rows (r7: was distinct (band, key)): the
             # probe still reads only (band, key), but keeping doc_id makes
             # the store FORGETTABLE — forget_docs_minhash drops a doc's
@@ -462,17 +532,11 @@ def run_minhash_dedup_stream(
             # was impossible without re-deriving from text).  State grows
             # from O(distinct buckets) to O(docs x bands) — the same bound
             # the purge stream's band store already carries.
-            _write_batch_partition(
-                b.select("doc_id", "band", "key"), batch_id, bands_dir
-            )
+            ctx.write(bands, b.select("doc_id", "band", "key"))
         finally:
             b.unpersist()
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(documents, checkpoint_dir, [out, bands], step)
 
 
 def run_span_flags_stream(
@@ -514,10 +578,7 @@ def run_span_flags_stream(
     idempotent form; per-doc stats are an aggregation of this set, as in
     the batch operator).
 
-    Fault tolerance: identical scheme to ``run_minhash_dedup_stream`` —
-    batch_id-partitioned dynamic-overwrite sinks, ``batch_id < current``
-    store probe, committed-data existence glob, batch-0 stale-partition
-    prune.  ``horizon_batches`` bounds the store to the trailing N
+    ``horizon_batches`` bounds the store to the trailing N
     micro-batches (duplication-WITHIN-horizon: a position is flagged iff
     a hash twin exists inside the window; state becomes one row per
     (batch in horizon, distinct hash in that batch) — O(window hashes)).
@@ -527,20 +588,13 @@ def run_span_flags_stream(
         _span_window_rows,
     )
 
-    _check_horizon(horizon_batches)
     width = DUP_SPAN_W if w is None else w
     if width < 1:
         raise ValueError(f"w must be >= 1 (got {width})")
+    out = _Store(output_dir)
+    firsts_store = _Store(store_dir, horizon=horizon_batches, locked=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _forget_guard(spark, [store_dir])
-        if batch_id == 0:
-            _prune_stale_batch_partitions(spark, output_dir)
-            _prune_stale_batch_partitions(spark, store_dir)
-        elif horizon_batches is not None:
-            _prune_batch_partitions_before(
-                spark, store_dir, batch_id - horizon_batches
-            )
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         rows = _span_window_rows(batch_df, width).persist()
         try:
             # groupBy + semi-join, not count-over-window: partial agg
@@ -555,10 +609,9 @@ def run_span_flags_stream(
             )
             within = rows.join(dup_h, "h", "leftsemi").select("doc_id", "p")
             seen_h = None
-            if _committed_batch_data_exists(spark, store_dir):
-                store = _horizon_probe(
-                    spark.read.parquet(store_dir), batch_id, horizon_batches
-                ).select(
+            stored = ctx.read(firsts_store)
+            if stored is not None:
+                store = stored.select(
                     "h",
                     F.col("doc_id").alias("_sd"),
                     F.col("p").alias("_sp"),
@@ -574,7 +627,7 @@ def run_span_flags_stream(
                 seen_h = store.select("h")
             else:  # first batch: no store yet
                 dup = within
-            _write_batch_partition(dup.distinct(), batch_id, output_dir)
+            ctx.write(out, dup.distinct())
             # Store the first position (min (doc_id, p) within the batch)
             # of every hash this batch contains.  Unbounded mode anti-joins
             # out hashes already stored (one row per distinct hash ever —
@@ -593,15 +646,11 @@ def run_span_flags_stream(
                 .agg(F.min(F.struct("doc_id", "p")).alias("_m"))
                 .select("h", F.col("_m.doc_id").alias("doc_id"), F.col("_m.p").alias("p"))
             )
-            _write_batch_partition(first_rows, batch_id, store_dir)
+            ctx.write(firsts_store, first_rows)
         finally:
             rows.unpersist()
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(documents, checkpoint_dir, [out, firsts_store], step)
 
 
 def run_decontam_stream(
@@ -626,25 +675,18 @@ def run_decontam_stream(
 
     Scale: the per-batch plan is the batch plan — the bench side stays
     KB..MB broadcast at any corpus size; the stream side shuffles only the
-    micro-batch.  Emits parquet rows to ``output_dir``, batch_id-partitioned
-    with dynamic overwrite so at-least-once replays never duplicate rows
-    (see run_minhash_dedup_stream).
+    micro-batch.  Emits parquet rows to ``output_dir``, batch_id-partitioned.
     """
     from cloudcomputing_flink_application_spark.operators.pipeline import (
         decontaminate,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            _prune_stale_batch_partitions(spark, output_dir)
-        out = decontaminate(bench_docs.unionByName(batch_df))
-        _write_batch_partition(out, batch_id, output_dir)
+    out = _Store(output_dir)
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
+        ctx.write(out, decontaminate(bench_docs.unionByName(batch_df)))
+
+    return _run_incremental(documents, checkpoint_dir, [out], step)
 
 
 def run_purge_dedup_stream(
@@ -686,11 +728,6 @@ def run_purge_dedup_stream(
     closure runs over the EDGE store only — near-dup pairs, not the
     corpus — which is why rebuild-per-batch stays cheap at any corpus
     size (measured sub-linear in SCALING.md for the batch closure).
-    Fault tolerance: every store and the sink are batch_id-partitioned
-    with dynamic overwrite (at-least-once replays replace), probes read
-    ``batch_id < current`` only, first-batch detection via the
-    committed-data glob, batch-0 prune of stale partitions — the same
-    contract as the other incremental jobs.
 
     ``horizon_batches`` bounds the state by TIME, like the other two
     horizoned jobs — but purge under aging is NOT incrementally
@@ -760,7 +797,6 @@ def run_purge_dedup_stream(
         star_edges_from_bands,
     )
 
-    _check_horizon(horizon_batches)
     if emit not in ("full", "delta"):
         raise ValueError(f"emit must be 'full' or 'delta', got {emit!r}")
     if compact_every is not None:
@@ -775,23 +811,19 @@ def run_purge_dedup_stream(
                 f"compact_every must be >= 1 (got {compact_every}); "
                 "omit it to keep the full delta history"
             )
-    bands_dir = f"{state_dir}/bands"
-    toksets_dir = f"{state_dir}/toksets"
-    edges_dir = f"{state_dir}/edges"
-    stats_dir = f"{state_dir}/docstats"
+    # the output is forget-locked too (r9): compaction swaps it through
+    # the staging/backup dance, so batch start must heal a half-done swap
+    # — and an offline compact_purge_deltas locks it, which the guard
+    # turns into a loud stream refusal instead of interleaved writes.
+    out = _Store(output_dir, locked=True)
+    bands = _Store(f"{state_dir}/bands", horizon=horizon_batches, locked=True)
+    toksets = _Store(f"{state_dir}/toksets", horizon=horizon_batches, locked=True)
+    edges = _Store(f"{state_dir}/edges", locked=True)
+    stats = _Store(f"{state_dir}/docstats", horizon=horizon_batches, locked=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # output_dir in the guard list (r9): compaction swaps it through
-        # the staging/backup dance, so batch start must heal a half-done
-        # swap — and an offline compact_purge_deltas locks it, which this
-        # guard turns into a loud stream refusal instead of interleaved
-        # writes.
-        _forget_guard(
-            spark, [bands_dir, toksets_dir, edges_dir, stats_dir, output_dir]
-        )
-        if batch_id == 0:
-            for d in (output_dir, bands_dir, toksets_dir, edges_dir, stats_dir):
-                _prune_stale_batch_partitions(spark, d)
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
+        spark = ctx.spark
+        if ctx.id == 0:
             # Record the emission mode next to the output (sibling marker,
             # like the locks — survives swaps): offline compaction folds
             # latest-row-per-doc, which is WRONG over full-mode partitions
@@ -801,24 +833,15 @@ def run_purge_dedup_stream(
             # without this marker (r9 review catch).  A fresh-checkpoint
             # full-mode rerun over an old delta root clears it.
             _set_delta_marker(spark, output_dir, emit == "delta")
-        elif horizon_batches is not None:
-            for d in (bands_dir, toksets_dir, stats_dir):
-                _prune_batch_partitions_before(
-                    spark, d, batch_id - horizon_batches
-                )
-        if (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
-            and _committed_batch_data_exists(spark, output_dir)
-        ):
+        elif compact_every is not None and ctx.id % compact_every == 0:
             # In-stream compaction, at batch START so only COMMITTED
             # partitions (< batch_id) fold — a crashed prior attempt of
             # THIS batch may have left its own partition, which the
             # below= cutoff excludes (it is rewritten later this call).
             # Idempotent under replay: folding a snapshot yields the
             # snapshot.
-            _compact_delta_partitions(spark, output_dir, below=batch_id)
+            _compact_delta_partitions(spark, output_dir, below=ctx.id)
+
         # tokenize ONCE per micro-batch: the persisted token sets feed both
         # the band pipeline and the jaccard verify (mirrors the batch
         # twin's shared-tokset plan)
@@ -833,32 +856,9 @@ def run_purge_dedup_stream(
                 # read back from the stores; star + verify + closure rerun
                 # over the trailing window, so aged-out bucket mins and
                 # retracted edges can never leave stale state behind.
-                # Each store carries its OWN committed-data guard: the
-                # writes below are sequential, so a first-batch crash
-                # between them leaves the stores unevenly initialized and
-                # a single bands-only check would wedge every replay on
-                # the missing ones (the exact failure the glob exists
-                # to prevent).
-                def windowed(store_dir, base, cols):
-                    if not _committed_batch_data_exists(spark, store_dir):
-                        return base
-                    return base.unionByName(
-                        _horizon_probe(
-                            spark.read.parquet(store_dir),
-                            batch_id,
-                            horizon_batches,
-                        ).select(*cols)
-                    )
-
-                wb = windowed(
-                    bands_dir,
-                    b.select("doc_id", "band", "key"),
-                    ["doc_id", "band", "key"],
-                )
-                wtoks = windowed(toksets_dir, toks, toks.columns)
-                all_stats = windowed(
-                    stats_dir, batch_stats, ["doc_id", "n_chars"]
-                )
+                wb = ctx.with_prior(bands, b.select("doc_id", "band", "key"))
+                wtoks = ctx.with_prior(toksets, toks)
+                all_stats = ctx.with_prior(stats, batch_stats)
                 window_edges = jaccard_verified_edges(
                     star_edges_from_bands(wb), wtoks
                 ).select("doc_id", "rep")
@@ -877,11 +877,10 @@ def run_purge_dedup_stream(
                         # too — the fully bounded mode: O(window) state,
                         # O(changed) writes, O(compact_every) fold.
                         purge = purge.persist()
+                        emitted = ctx.read(out)
                         prev = (
-                            purge_table_from_deltas(
-                                spark, output_dir, below=batch_id
-                            )
-                            if _committed_batch_data_exists(spark, output_dir)
+                            _fold_deltas(emitted)
+                            if emitted is not None
                             else spark.createDataFrame(
                                 [],
                                 "doc_id LONG, n_members LONG, "
@@ -892,26 +891,21 @@ def run_purge_dedup_stream(
                         out_rows = _table_delta(purge, prev)
                     else:
                         out_rows = purge
-                    _write_batch_partition(out_rows, batch_id, output_dir)
-                    _write_batch_partition(
-                        b.select("doc_id", "band", "key"), batch_id, bands_dir
-                    )
-                    _write_batch_partition(toks, batch_id, toksets_dir)
-                    _write_batch_partition(batch_stats, batch_id, stats_dir)
+                    ctx.write(out, out_rows)
+                    ctx.write(bands, b.select("doc_id", "band", "key"))
+                    ctx.write(toksets, toks)
+                    ctx.write(stats, batch_stats)
                 finally:
                     for df in locals_cached:
                         df.unpersist()
                 return
-            have_state = _committed_batch_data_exists(spark, bands_dir)
-            if have_state:
-                prior_bands = (
-                    spark.read.parquet(bands_dir)
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("doc_id", "band", "key")
-                )
+            prior_bands = ctx.read(bands)
+            if prior_bands is not None:
                 touched = b.select("band", "key").distinct()
                 allb = b.select("doc_id", "band", "key").unionByName(
-                    prior_bands.join(touched, ["band", "key"], "leftsemi")
+                    prior_bands.select("doc_id", "band", "key").join(
+                        touched, ["band", "key"], "leftsemi"
+                    )
                 )
             else:
                 allb = b.select("doc_id", "band", "key")
@@ -922,35 +916,14 @@ def run_purge_dedup_stream(
                 "doc_id",
                 "leftsemi",
             )
-            all_toks = (
-                toks.unionByName(
-                    spark.read.parquet(toksets_dir)
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select(*toks.columns)
-                )
-                if _committed_batch_data_exists(spark, toksets_dir)
-                else toks
-            )
+            all_toks = ctx.with_prior(toksets, toks)
             edges_new = (
                 jaccard_verified_edges(star, toks, all_toks)
                 .select("doc_id", "rep")
                 .persist()
             )
-            prior = (
-                lambda d, cols: spark.read.parquet(d)
-                .filter(F.col("batch_id") < F.lit(batch_id))
-                .select(*cols)
-            )
-            all_edges = (
-                edges_new.unionByName(prior(edges_dir, ["doc_id", "rep"]))
-                if _committed_batch_data_exists(spark, edges_dir)
-                else edges_new
-            )
-            all_stats = (
-                batch_stats.unionByName(prior(stats_dir, ["doc_id", "n_chars"]))
-                if _committed_batch_data_exists(spark, stats_dir)
-                else batch_stats
-            )
+            all_edges = ctx.with_prior(edges, edges_new)
+            all_stats = ctx.with_prior(stats, batch_stats)
             if emit == "delta":
                 # the emitter _persist()s its members/touched frames
                 # (multi-branch reuse); the finally below releases them
@@ -964,13 +937,11 @@ def run_purge_dedup_stream(
                 )
             else:
                 purge = purge_from_edges(all_edges, all_stats)
-            _write_batch_partition(purge, batch_id, output_dir)
-            _write_batch_partition(
-                b.select("doc_id", "band", "key"), batch_id, bands_dir
-            )
-            _write_batch_partition(toks, batch_id, toksets_dir)
-            _write_batch_partition(edges_new, batch_id, edges_dir)
-            _write_batch_partition(batch_stats, batch_id, stats_dir)
+            ctx.write(out, purge)
+            ctx.write(bands, b.select("doc_id", "band", "key"))
+            ctx.write(toksets, toks)
+            ctx.write(edges, edges_new)
+            ctx.write(stats, batch_stats)
         finally:
             b.unpersist()
             toks.unpersist()
@@ -979,17 +950,9 @@ def run_purge_dedup_stream(
             if cache_mark is not None:
                 dedup_release_cached(since=cache_mark)
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_incremental(
+        documents, checkpoint_dir, [bands, toksets, edges, stats, out], step
     )
-
-
-def _fs_path(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def _replace_dir(spark, src: str, dst: str) -> None:
@@ -1227,6 +1190,11 @@ def purge_table_from_deltas(
     rows = spark.read.parquet(output_dir)
     if below is not None:
         rows = rows.filter(F.col("batch_id") < F.lit(below))
+    return _fold_deltas(rows)
+
+
+def _fold_deltas(rows: DataFrame) -> DataFrame:
+    """Latest row per doc_id across delta partitions, tombstones dropped."""
     latest = rows.groupBy("doc_id").agg(
         F.max_by(F.struct("n_members", "chars_saved"), "batch_id").alias("_m")
     )
@@ -1291,7 +1259,14 @@ def _compact_delta_partitions(
     staging-dir + rename-to-backup swap as the forget rewrites
     (:func:`_replace_dir`); a half-done swap heals at the next
     :func:`_recover_swap` (batch start or re-run)."""
-    snap_id = _max_batch_partition(spark, output_dir, below=below)
+    snap_id = max(
+        (
+            k
+            for k, _ in _batch_partitions(spark, output_dir)
+            if below is None or k < below
+        ),
+        default=-1,
+    )
     if snap_id < 0:
         return
     table = purge_table_from_deltas(spark, output_dir, below=below).withColumn(
@@ -1355,21 +1330,6 @@ def _compact_marker_glob(store_dir: str) -> str:
     return store_dir.rstrip("/") + ".compact_commit.*"
 
 
-def _stream_partition_dirs(spark, store_dir: str) -> list:
-    """The store's STREAM partition dirs (batch_id >= 1) as FileStatus
-    paths; the build's batch_id=0 foundation is never in the list."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(
-        store_dir.rstrip("/") + "/batch_id=*"
-    )
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    for st in fs.globStatus(pattern) or []:
-        if int(st.getPath().getName().split("=", 1)[1]) >= 1:
-            out.append(st.getPath())
-    return out
-
-
 def _finish_compact(spark, store_dir: str, snap: int) -> None:
     """Complete a committed compaction (the marker exists, so the folded
     snapshot in ``.compact_tmp`` is complete): delete the store's stream
@@ -1377,17 +1337,13 @@ def _finish_compact(spark, store_dir: str, snap: int) -> None:
     step is idempotent, so a crash anywhere re-runs to the same end
     state — the snapshot dir is skipped by the delete loop exactly when
     it has already been moved (the staging copy is gone)."""
-    fs, _ = _fs_path(spark, store_dir)
-    jvm = spark._jvm
-    p_tmp_snap = jvm.org.apache.hadoop.fs.Path(
-        f"{_compact_tmp_of(store_dir)}/batch_id={snap}"
-    )
+    fs, p_tmp_snap = _fs_path(spark, f"{_compact_tmp_of(store_dir)}/batch_id={snap}")
     tmp_snap_exists = fs.exists(p_tmp_snap)
-    for p in _stream_partition_dirs(spark, store_dir):
-        if int(p.getName().split("=", 1)[1]) > snap:
-            continue  # an uncommitted batch's partition: not folded,
-            # left for its replay's dynamic overwrite
-        if not tmp_snap_exists and p.getName() == f"batch_id={snap}":
+    for k, p in _batch_partitions(spark, store_dir):
+        if k < 1 or k > snap:
+            continue  # the build's foundation, or an uncommitted batch's
+            # partition: not folded, left for its replay's overwrite
+        if not tmp_snap_exists and k == snap:
             continue  # already the moved-in snapshot
         # a false return is a FAILED delete (same Hadoop boolean
         # convention as the rename below): proceeding would leave the
@@ -1405,23 +1361,15 @@ def _finish_compact(spark, store_dir: str, snap: int) -> None:
         # rows now that the stream dirs are gone — raise with marker +
         # staging intact (the recoverable W2 state) instead of falling
         # through to the cleanup that would delete them (r9 review)
-        if not fs.rename(
-            p_tmp_snap,
-            jvm.org.apache.hadoop.fs.Path(
-                f"{store_dir.rstrip('/')}/batch_id={snap}"
-            ),
-        ):
+        _, p_snap = _fs_path(spark, f"{store_dir.rstrip('/')}/batch_id={snap}")
+        if not fs.rename(p_tmp_snap, p_snap):
             raise IOError(
                 f"rename of the compaction snapshot into {store_dir} "
                 "failed; marker and staging left in place — re-run the "
                 "compaction to roll forward"
             )
-    for st in (
-        fs.globStatus(
-            jvm.org.apache.hadoop.fs.Path(_compact_marker_glob(store_dir))
-        )
-        or []
-    ):
+    _, p_markers = _fs_path(spark, _compact_marker_glob(store_dir))
+    for st in fs.globStatus(p_markers) or []:
         fs.delete(st.getPath(), False)
     _, p_tmp = _fs_path(spark, _compact_tmp_of(store_dir))
     if fs.exists(p_tmp):
@@ -1440,14 +1388,8 @@ def _recover_compact(spark, store_dir: str) -> None:
     mutation starts only after the marker).  Called by compaction itself
     and by every other maintenance op on these stores before it reads
     them, so a half-compacted store is whole again before any rewrite."""
-    fs, _ = _fs_path(spark, store_dir)
-    jvm = spark._jvm
-    markers = (
-        fs.globStatus(
-            jvm.org.apache.hadoop.fs.Path(_compact_marker_glob(store_dir))
-        )
-        or []
-    )
+    fs, p_markers = _fs_path(spark, _compact_marker_glob(store_dir))
+    markers = fs.globStatus(p_markers) or []
     if markers:
         snap = int(markers[0].getPath().getName().rsplit(".", 1)[1])
         _finish_compact(spark, store_dir, snap)
@@ -1533,7 +1475,9 @@ def compact_batch_store(spark, store_dir: str, checkpoint_dir: str | None) -> No
         raise
     _recover_swap(spark, store_dir)
     _recover_compact(spark, store_dir)
-    stream_dirs = _stream_partition_dirs(spark, store_dir)
+    # the STREAM partitions (batch_id >= 1); the build's foundation is
+    # never folded
+    stream_dirs = [(k, p) for k, p in _batch_partitions(spark, store_dir) if k >= 1]
     if checkpoint_dir is not None:
         # committed-bounded fold: epoch N writes partition N+1, so
         # partitions above latest_commit+1 belong to an uncommitted
@@ -1548,20 +1492,14 @@ def compact_batch_store(spark, store_dir: str, checkpoint_dir: str | None) -> No
             commit_bound = (
                 _latest_numbered(spark, f"{checkpoint_dir}/commits") + 1
             )
-            stream_dirs = [
-                p
-                for p in stream_dirs
-                if int(p.getName().split("=", 1)[1]) <= commit_bound
-            ]
+            stream_dirs = [(k, p) for k, p in stream_dirs if k <= commit_bound]
     if len(stream_dirs) < 2:
         # nothing to fold (fresh store, or already compacted): a true
         # no-op — release our lock; a resumed crashed run that healed
         # down to this state is complete
         _release_forget_locks(spark, [store_dir])
         return
-    snap = max(
-        int(p.getName().split("=", 1)[1]) for p in stream_dirs
-    )
+    snap = max(k for k, _ in stream_dirs)
     fs, _ = _fs_path(spark, store_dir)
     # partition-pruned: only the foldable stream dirs are scanned (the
     # upper bound excludes an uncommitted batch's partition)
@@ -1571,7 +1509,7 @@ def compact_batch_store(spark, store_dir: str, checkpoint_dir: str | None) -> No
     # one output file per maxPartitionBytes of STREAM data via coalesce
     # (narrow dependency: compaction stays shuffle-free)
     stream_bytes = sum(
-        fs.getContentSummary(p).getLength() for p in stream_dirs
+        fs.getContentSummary(p).getLength() for _, p in stream_dirs
     )
     max_pb = spark._jvm.org.apache.spark.util.Utils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
@@ -1595,22 +1533,6 @@ def compact_batch_store(spark, store_dir: str, checkpoint_dir: str | None) -> No
     _release_forget_locks(spark, [store_dir])
 
 
-def _max_batch_partition(spark, path: str, below: int | None = None) -> int:
-    """Highest ``batch_id=K`` partition under ``path`` (-1 if none);
-    ``below`` restricts to K < below (the compactor's committed-only
-    window — a crashed attempt of the CURRENT batch may have left its own
-    partition, which must not become the snapshot id)."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/batch_id=*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    best = -1
-    for st in fs.globStatus(pattern) or []:
-        k = int(st.getPath().getName().split("=", 1)[1])
-        if below is None or k < below:
-            best = max(best, k)
-    return best
-
-
 def _heal_purge_output(
     spark,
     purge_dir: str,
@@ -1632,7 +1554,7 @@ def _heal_purge_output(
     _recover_swap(spark, purge_dir)
     if not _committed_batch_data_exists(spark, purge_dir):
         return  # nothing ever emitted: nothing to heal
-    snap_id = _max_batch_partition(spark, purge_dir)
+    snap_id = max(k for k, _ in _batch_partitions(spark, purge_dir))
     if edges_frame is not None:
         edges = edges_frame
     elif edges_dir is not None and _committed_batch_data_exists(spark, edges_dir):
@@ -1806,7 +1728,7 @@ def forget_docs(
         return
     if not _committed_batch_data_exists(spark, bands_dir):
         # every doc forgotten: the edge store must empty too
-        _prune_stale_batch_partitions(spark, edges_dir)
+        _drop_partitions(spark, edges_dir)
         if purge_dir is not None:
             _heal_purge_output(spark, purge_dir, None, stats_dir)
         _release_forget_locks(spark, stores)
@@ -1878,8 +1800,7 @@ def run_ivf_assign_stream(
       ``(vec_id, cluster, ccos_q)`` rows under
       ``{index_root}/assignments/batch_id=N`` — the SAME layout the
       build pass wrote batch 0 in, so batch + stream rows form one
-      store, idempotent under at-least-once replay (dynamic partition
-      overwrite, as in every other incremental job here);
+      store;
     - append one drift row ``(n_vecs, sum_ccos_q)`` under
       ``{index_root}/drift/batch_id=N`` — the exact-integer per-batch
       assignment statistics ``similarity.drift_report`` divides against
@@ -1892,9 +1813,6 @@ def run_ivf_assign_stream(
     static artifact, so micro-batching is trivially exact; drift over
     batches drawn from the build corpus reads exactly 1.0.
 
-    Batch 0 prune covers only partitions this stream owns (batch_id >= 1;
-    the build pass's batch 0 is the index's foundation, not stale state).
-
     ``drift_horizon`` bounds the drift store to the trailing N readings
     — otherwise it grows one partition per micro-batch forever, the
     same O(stream-age) term the assignment/codes stores shed via
@@ -1902,66 +1820,33 @@ def run_ivf_assign_stream(
     NEWEST readings (``--rebuild-if-drift`` requires the newest
     ``--drift-consecutive``; the report is a staleness instrument, not
     an audit log), and aged-out rows are k-anonymous per-batch
-    aggregates with no compliance obligation.  Pruning happens at batch
-    START (the ``_prune_batch_partitions_before`` replay contract).
-    Size it >= the ``--drift-consecutive`` your maintenance runs use: a
+    aggregates with no compliance obligation.  Size it >= the ``--drift-consecutive`` your maintenance runs use: a
     shorter horizon leaves fewer readings than the rebuild rule needs
     and it (correctly, conservatively) never fires — the CLI help
     documents the coupling (the two flags live on different
     invocations, so it cannot be refused mechanically)."""
-    _check_horizon(drift_horizon)
     cb = spark.read.parquet(f"{index_root}/codebook")
-    asg_dir = f"{index_root}/assignments"
-    drift_dir = f"{index_root}/drift"
+    # stream batches land at batch_id + 1: partition 0 is the build pass's
+    asg = _Store(f"{index_root}/assignments", first=1, locked=True)
+    # the drift horizon counts the current reading
+    drift = _Store(
+        f"{index_root}/drift", first=1, horizon=drift_horizon, current=True
+    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         from cloudcomputing_flink_application_spark.operators.similarity import (
             assignment_rows,
             assignment_stats,
         )
 
-        _forget_guard(spark, [asg_dir])
-        if batch_id == 0:
-            _prune_batch_partitions_after(spark, asg_dir, 0)
-            _prune_stale_batch_partitions(spark, drift_dir)
-        if drift_horizon is not None:
-            # age out drift readings older than the trailing window
-            # (this batch writes partition batch_id + 1; keep it and
-            # its drift_horizon - 1 predecessors) — batch-START prune,
-            # so a replay still sees every partition it needs
-            _prune_batch_partitions_before(
-                spark, drift_dir, batch_id + 2 - drift_horizon
-            )
         rows = assignment_rows(batch_df, F.broadcast(cb)).persist()
         try:
-            # stream batches land at batch_id + 1: partition 0 is the
-            # build pass's
-            _write_batch_partition(rows, batch_id + 1, asg_dir)
-            _write_batch_partition(
-                assignment_stats(rows), batch_id + 1, drift_dir
-            )
+            ctx.write(asg, rows)
+            ctx.write(drift, assignment_stats(rows))
         finally:
             rows.unpersist()
 
-    return (
-        embeddings.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def _prune_batch_partitions_after(spark, path: str, keep_max: int) -> None:
-    """Delete ``batch_id=K`` partitions with K > ``keep_max`` — the
-    fresh-checkpoint prune for stores whose low partitions belong to a
-    BATCH build pass (the IVF assignment store: partition 0 is the build
-    corpus, stream partitions start at 1)."""
-    jvm = spark._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/batch_id=*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    for st in fs.globStatus(pattern) or []:
-        name = st.getPath().getName()
-        if int(name.split("=", 1)[1]) > keep_max:
-            fs.delete(st.getPath(), True)
+    return _run_incremental(embeddings, checkpoint_dir, [asg, drift], step)
 
 
 def run_pq_encode_stream(
@@ -1976,17 +1861,14 @@ def run_pq_encode_stream(
     between rebuilds, and encoding is a per-row map — so each micro-
     batch encodes against the PERSISTED codebook and appends its codes
     under ``{index_root}/codes/batch_id=N+1``, the same layout the build
-    pass wrote batch 0 in (one store, idempotent under at-least-once
-    replay via dynamic partition overwrite).
+    pass wrote batch 0 in (one store).
 
     Geometry (m, ksub) comes from ``pq_meta`` — a stream can never
     encode with a different slicing than the artifact was built with.
     Contract (tests/test_pq.py): the accumulated codes store equals
     ``pq_encode`` over the union of all batches under the same codebook
     — encoding is per-row against a static artifact, so micro-batching
-    is trivially exact.  Batch-0 prune covers only partitions this
-    stream owns (batch_id >= 1; the build pass's batch 0 is the store's
-    foundation, not stale state).  ``similarity.build_pq_index`` fences
+    is trivially exact.  ``similarity.build_pq_index`` fences
     this stream with the shared ``.forget_lock`` marker during rebuilds;
     ``forget_pq_vecs`` deletes rows under the same contract.
     """
@@ -2005,24 +1887,15 @@ def run_pq_encode_stream(
     cb = read_pq_codebook(spark, index_root)
     codes_dir = f"{index_root}/codes"
     _refuse_unpartitioned_store(spark, codes_dir)
+    codes = _Store(codes_dir, first=1, locked=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _forget_guard(spark, [codes_dir])
-        if batch_id == 0:
-            _prune_batch_partitions_after(spark, codes_dir, 0)
-        _write_batch_partition(
-            pq_encode(
-                batch_df, m=params["m"], ksub=params["ksub"], codebook=cb
-            ),
-            batch_id + 1,
-            codes_dir,
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
+        ctx.write(
+            codes,
+            pq_encode(batch_df, m=params["m"], ksub=params["ksub"], codebook=cb),
         )
 
-    return (
-        embeddings.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(embeddings, checkpoint_dir, [codes], step)
 
 
 def run_ivfpq_search_stream(
@@ -2050,8 +1923,7 @@ def run_ivfpq_search_stream(
     vector stops being returned from the next micro-batch on
     (compliance deletion reaches the serving path, pinned in tests).
     ``corpus`` supplies the rerank shortlist's raw vectors, the only
-    raw reads.  Results are idempotent under at-least-once replay via
-    dynamic partition overwrite, like every incremental job here.
+    raw reads.
 
     Contract (tests/test_pq.py): each batch's rows == the batch
     operator with ``queries=`` that batch's frame — search is per-query
@@ -2061,10 +1933,11 @@ def run_ivfpq_search_stream(
     and the restarted stream replays it idempotently against the
     post-forget store."""
     from cloudcomputing_flink_application_spark.operators.similarity import (
-        NPROBE,
         TOPK,
+        cached_mark,
         ivfpq_topk_from_index,
         pq_build_params,
+        release_cached,
     )
 
     if pq_build_params(spark, pq_root) is None:
@@ -2084,26 +1957,18 @@ def run_ivfpq_search_stream(
     # and auto floors at max(PQ_SHORTLIST, k) / NPROBE, so only
     # explicit values can conflict with k or fall below 1
     k_eff = k if k is not None else TOPK
-    shortlist_eff = shortlist
-    nprobe_eff = nprobe
-    if k_eff < 1 or (shortlist_eff is not None and k_eff > shortlist_eff):
+    if k_eff < 1 or (shortlist is not None and k_eff > shortlist):
         raise ValueError(
-            f"need 1 <= k <= shortlist, got k={k_eff} "
-            f"shortlist={shortlist_eff}"
+            f"need 1 <= k <= shortlist, got k={k_eff} shortlist={shortlist}"
         )
-    if nprobe_eff is not None and nprobe_eff < 1:
+    if nprobe is not None and nprobe < 1:
         # nprobe <= 0 keeps zero probes: every batch would "succeed"
         # with an empty result forever (r9 review)
-        raise ValueError(f"need nprobe >= 1, got {nprobe_eff}")
+        raise ValueError(f"need nprobe >= 1, got {nprobe}")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from cloudcomputing_flink_application_spark.operators.similarity import (
-            cached_mark,
-            release_cached,
-        )
+    out = _Store(output_dir)
 
-        if batch_id == 0:
-            _prune_batch_partitions_after(spark, output_dir, -1)
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         # scoped cache release: each batch's from-index call persists a
         # fresh packed-codebook frame (reference-unequal per read);
         # without the mark a long-lived serving stream accumulates one
@@ -2111,28 +1976,23 @@ def run_ivfpq_search_stream(
         # r8 lesson, r9 review catch)
         mark = cached_mark()
         try:
-            _write_batch_partition(
+            ctx.write(
+                out,
                 ivfpq_topk_from_index(
                     spark,
                     ivf_root,
                     pq_root,
                     corpus,
                     k=k_eff,
-                    nprobe=nprobe_eff,
-                    shortlist=shortlist_eff,
+                    nprobe=nprobe,
+                    shortlist=shortlist,
                     queries=batch_df,
                 ),
-                batch_id,
-                output_dir,
             )
         finally:
             release_cached(since=mark)
 
-    return (
-        queries.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(queries, checkpoint_dir, [out], step)
 
 
 def forget_pq_vecs(
@@ -2146,22 +2006,7 @@ def forget_pq_vecs(
     centroids are means over many vectors (k-anonymous aggregates, no
     per-vector trace); full statistical erasure = rebuild
     (``build_pq_index`` on the surviving corpus)."""
-    ids = [int(i) for i in vec_ids]
-    if not ids:
-        return
-    codes_dir = f"{index_root}/codes"
-    created = _acquire_forget_locks(spark, [codes_dir])
-    try:
-        _refuse_uncommitted(spark, checkpoint_dir)
-        _refuse_unpartitioned_store(spark, codes_dir)
-    except Exception:
-        _release_forget_locks(spark, created)
-        raise
-    _recover_swap(spark, codes_dir)
-    _recover_compact(spark, codes_dir)  # a crashed compaction rolls forward
-    ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id LONG")
-    _rewrite_minus(spark, codes_dir, ids_df, key="vec_id")
-    _release_forget_locks(spark, [codes_dir])
+    _forget_single_store(spark, f"{index_root}/codes", vec_ids, checkpoint_dir, key="vec_id")
 
 
 def forget_vecs(spark, index_root: str, vec_ids, checkpoint_dir: str | None) -> None:
@@ -2179,39 +2024,32 @@ def forget_vecs(spark, index_root: str, vec_ids, checkpoint_dir: str | None) -> 
     (``build_ivf_index`` on the surviving corpus), which the drift
     metric prices; the vector store itself is the caller's corpus.
     """
-    ids = [int(i) for i in vec_ids]
-    if not ids:
-        return
-    asg_dir = f"{index_root}/assignments"
-    created = _acquire_forget_locks(spark, [asg_dir])
-    try:
-        _refuse_uncommitted(spark, checkpoint_dir)
-    except Exception:
-        _release_forget_locks(spark, created)
-        raise
-    _recover_swap(spark, asg_dir)
-    _recover_compact(spark, asg_dir)  # a crashed compaction rolls forward
-    ids_df = spark.createDataFrame([(i,) for i in ids], "vec_id LONG")
-    _rewrite_minus(spark, asg_dir, ids_df, key="vec_id")
-    _release_forget_locks(spark, [asg_dir])
+    _forget_single_store(
+        spark, f"{index_root}/assignments", vec_ids, checkpoint_dir, key="vec_id"
+    )
 
 
-def _forget_single_store(spark, store_dir: str, doc_ids, checkpoint_dir) -> None:
-    """The shared single-store deletion: lock -> refuse-uncommitted ->
-    heal -> rewrite-minus -> unlock (the forget_docs contract without the
-    edge re-derivation)."""
-    ids = [int(i) for i in doc_ids]
+def _forget_single_store(
+    spark, store_dir: str, ids, checkpoint_dir, key: str = "doc_id"
+) -> None:
+    """The shared single-store deletion (the forget_docs contract without
+    the edge re-derivation): lock -> refuse (an uncommitted micro-batch,
+    or data files at the store root) -> heal (a half-done swap; a crashed
+    compaction rolls forward) -> rewrite minus the ``key`` ids -> unlock."""
+    ids = [int(i) for i in ids]
     if not ids:
         return
     created = _acquire_forget_locks(spark, [store_dir])
     try:
         _refuse_uncommitted(spark, checkpoint_dir)
+        _refuse_unpartitioned_store(spark, store_dir)
     except Exception:
         _release_forget_locks(spark, created)
         raise
     _recover_swap(spark, store_dir)
-    ids_df = spark.createDataFrame([(i,) for i in ids], "doc_id LONG")
-    _rewrite_minus(spark, store_dir, ids_df)
+    _recover_compact(spark, store_dir)
+    ids_df = spark.createDataFrame([(i,) for i in ids], f"{key} LONG")
+    _rewrite_minus(spark, store_dir, ids_df, key=key)
     _release_forget_locks(spark, [store_dir])
 
 
@@ -2313,11 +2151,7 @@ def run_corpus_profile_stream(
 
     ``horizon_batches`` bounds the profile to the trailing N micro-batches
     INCLUDING the current one (profile-over-horizon: the rolling-window
-    report production monitoring wants); older partitions are pruned at
-    batch start.  Replay safety: both stores are batch_id-partitioned with
-    dynamic overwrite, and the emission reads partitions <= the current
-    batch — a replayed batch first rewrites its own partitions, then
-    recomputes the identical profile.
+    report production monitoring wants); older partitions are pruned.
     """
     from pyspark.sql import Window
 
@@ -2327,25 +2161,13 @@ def run_corpus_profile_stream(
         _profile_tokens,
     )
 
-    _check_horizon(horizon_batches)
-    sketches_dir = f"{state_dir}/sketches"
-    lenhist_dir = f"{state_dir}/lenhist"
+    out = _Store(output_dir)
+    sketches = _Store(f"{state_dir}/sketches", horizon=horizon_batches, current=True)
+    lenhist = _Store(f"{state_dir}/lenhist", horizon=horizon_batches, current=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id == 0:
-            _prune_stale_batch_partitions(spark, output_dir)
-            _prune_stale_batch_partitions(spark, sketches_dir)
-            _prune_stale_batch_partitions(spark, lenhist_dir)
-        elif horizon_batches is not None:
-            # the emission below reads batches > batch_id - horizon, so
-            # pruning strictly below that cutoff never races the read
-            _prune_batch_partitions_before(
-                spark, sketches_dir, batch_id - horizon_batches + 1
-            )
-            _prune_batch_partitions_before(
-                spark, lenhist_dir, batch_id - horizon_batches + 1
-            )
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         per_doc = _profile_per_doc(batch_df).persist()
+        cached = [per_doc]
         try:
             doc_sk = per_doc.groupBy("source").agg(
                 F.count("*").cast("long").alias("n_docs"),
@@ -2358,90 +2180,72 @@ def run_corpus_profile_stream(
                 .agg(F.hll_sketch_agg("tok").alias("tok_sk"))
             )
             tk = tok_sk.select(F.col("source").alias("_ts"), "tok_sk")
-            _write_batch_partition(
-                doc_sk.join(
-                    tk, F.col("source").eqNullSafe(F.col("_ts")), "left"
-                ).drop("_ts"),
-                batch_id,
-                sketches_dir,
+            sk = doc_sk.join(
+                tk, F.col("source").eqNullSafe(F.col("_ts")), "left"
+            ).drop("_ts").persist()
+            lens = per_doc.groupBy("source", "len").agg(
+                F.count("*").cast("long").alias("cnt")
+            ).persist()
+            cached += [sk, lens]
+            ctx.write(sketches, sk)
+            ctx.write(lenhist, lens)
+            # cumulative emission: this batch's partials plus the stored
+            # ones in the horizon.  Nothing arrived yet (an empty first
+            # batch, ADVICE r11) emits nothing; a LATER empty batch
+            # re-emits the cumulative profile, keeping the
+            # last-partition-equals-batch invariant.
+            sks = ctx.with_prior(sketches, sk)
+            hist = (
+                ctx.with_prior(lenhist, lens)
+                .groupBy("source", "len")
+                .agg(F.sum("cnt").alias("cnt"))
             )
-            _write_batch_partition(
-                per_doc.groupBy("source", "len").agg(
-                    F.count("*").cast("long").alias("cnt")
+            prof = sks.groupBy("source").agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("total_tokens").cast("long").alias("total_tokens"),
+                F.hll_sketch_estimate(F.hll_union_agg("text_sk")).alias(
+                    "distinct_texts_est"
                 ),
-                batch_id,
-                lenhist_dir,
+                # a source whose every doc tokenizes empty has NULL tok_sk
+                # rows only: union-agg skips nulls and yields NULL -> 0
+                F.coalesce(
+                    F.hll_sketch_estimate(F.hll_union_agg("tok_sk")), F.lit(0)
+                ).alias("distinct_tokens_est"),
+            )
+            wcum = (
+                Window.partitionBy("source")
+                .orderBy("len")
+                .rowsBetween(Window.unboundedPreceding, 0)
+            )
+            hc = hist.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
+                "n", F.sum("cnt").over(Window.partitionBy("source"))
+            )
+            quants = hc.groupBy("source").agg(
+                *[
+                    F.min(
+                        F.when(
+                            F.col("cum") >= F.expr(f"(n * {p} + 99) div 100"),
+                            F.col("len"),
+                        )
+                    ).alias(f"len_p{p}")
+                    for p in PROFILE_PCTS
+                ]
+            )
+            # null-safe stitch (r12, with the batch twins): a NULL source is
+            # a real group and an equi-join would drop its profile row
+            qr = quants.select(
+                F.col("source").alias("_sq"),
+                *[f"len_p{p}" for p in PROFILE_PCTS],
+            )
+            ctx.write(
+                out,
+                prof.join(qr, F.col("source").eqNullSafe(F.col("_sq"))).drop("_sq"),
             )
         finally:
-            per_doc.unpersist()
-        # ADVICE r11: an empty FIRST micro-batch writes no store partition
-        # (dynamic overwrite of a zero-row frame is a no-op), so the
-        # unconditional cumulative read below would die on parquet schema
-        # inference and kill the stream.  No committed store = nothing has
-        # ever arrived = nothing to emit; a LATER empty batch still finds
-        # committed partitions and re-emits the cumulative profile, keeping
-        # the last-partition-equals-batch invariant.
-        if not _committed_batch_data_exists(spark, sketches_dir):
-            return
-        # cumulative emission (reads INCLUDE the partitions just written)
-        sks = _horizon_probe(
-            spark.read.parquet(sketches_dir), batch_id + 1, horizon_batches
-        )
-        prof = sks.groupBy("source").agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("total_tokens").cast("long").alias("total_tokens"),
-            F.hll_sketch_estimate(F.hll_union_agg("text_sk")).alias(
-                "distinct_texts_est"
-            ),
-            # a source whose every doc tokenizes empty has NULL tok_sk rows
-            # only: union-agg skips nulls and yields NULL -> 0 distinct
-            F.coalesce(
-                F.hll_sketch_estimate(F.hll_union_agg("tok_sk")), F.lit(0)
-            ).alias("distinct_tokens_est"),
-        )
-        hist = (
-            _horizon_probe(
-                spark.read.parquet(lenhist_dir), batch_id + 1, horizon_batches
-            )
-            .groupBy("source", "len")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        wcum = (
-            Window.partitionBy("source")
-            .orderBy("len")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        hc = hist.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
-            "n", F.sum("cnt").over(Window.partitionBy("source"))
-        )
-        quants = hc.groupBy("source").agg(
-            *[
-                F.min(
-                    F.when(
-                        F.col("cum") >= F.expr(f"(n * {p} + 99) div 100"),
-                        F.col("len"),
-                    )
-                ).alias(f"len_p{p}")
-                for p in PROFILE_PCTS
-            ]
-        )
-        # null-safe stitch (r12, with the batch twins): a NULL source is
-        # a real group and an equi-join would drop its profile row
-        qr = quants.select(
-            F.col("source").alias("_sq"),
-            *[f"len_p{p}" for p in PROFILE_PCTS],
-        )
-        _write_batch_partition(
-            prof.join(qr, F.col("source").eqNullSafe(F.col("_sq"))).drop("_sq"),
-            batch_id,
-            output_dir,
-        )
+            for df in cached:
+                df.unpersist()
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(documents, checkpoint_dir, [out, sketches, lenhist], step)
 
 
 def run_clean_corpus_stream(
@@ -2474,21 +2278,13 @@ def run_clean_corpus_stream(
     plans are the batch plans: broadcast bench set, per-doc partial-agg
     shuffles, one window shuffle over the batch's survivors.
 
-    Fault tolerance: identical contract to ``run_minhash_dedup_stream`` —
-    both sinks batch_id-partitioned with dynamic overwrite (at-least-once
-    replays replace, never duplicate), the hash-store probe reads only
-    ``batch_id < current``, first-batch detection via the committed-data
-    glob, and batch 0 prunes partitions left by a prior run under a
-    different checkpoint.
-
     ``bench_docs`` must be the static benchmark slice
     (``doc_id % BENCH_MOD == 0``); benchmark rows arriving on the stream are
     dropped by the corpus filter, exactly as in batch.
 
     ``horizon_batches`` bounds the hash store by time exactly as in
     ``run_minhash_dedup_stream``: the uniq probe reads only the trailing
-    ``horizon_batches`` batches and older partitions are deleted at batch
-    start, so state is O(distinct kept texts in the horizon).  Semantics
+    ``horizon_batches`` batches and older partitions are pruned, so state is O(distinct kept texts in the horizon).  Semantics
     become dedup-within-horizon: a survivor is uniq iff no horizon-window
     survivor (or smaller same-batch doc_id) shares its text hash
     (streaming == batch-over-the-window pinned in tests).
@@ -2502,17 +2298,10 @@ def run_clean_corpus_stream(
         repetition_stats,
     )
 
-    _check_horizon(horizon_batches)
+    out = _Store(output_dir)
+    hashes = _Store(hashes_dir, horizon=horizon_batches, locked=True)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _forget_guard(spark, [hashes_dir])
-        if batch_id == 0:
-            _prune_stale_batch_partitions(spark, output_dir)
-            _prune_stale_batch_partitions(spark, hashes_dir)
-        elif horizon_batches is not None:
-            _prune_batch_partitions_before(
-                spark, hashes_dir, batch_id - horizon_batches
-            )
+    def step(batch_df: DataFrame, ctx: _Batch) -> None:
         corpus = batch_df.filter(F.col("doc_id") % BENCH_MOD != 0).persist()
         flags = None
         try:
@@ -2544,10 +2333,8 @@ def run_clean_corpus_stream(
             # hash partition onto one task)
             local_canon = surv.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
             store_rows = local_canon
-            if _committed_batch_data_exists(spark, hashes_dir):
-                probe = _horizon_probe(
-                    spark.read.parquet(hashes_dir), batch_id, horizon_batches
-                )
+            probe = ctx.read(hashes)
+            if probe is not None:
                 # anti-join against the PLAIN probe (duplicate-insensitive)
                 # — aggregating first would add a full store exchange to
                 # every unbounded batch for nothing (r8 review catch); the
@@ -2583,7 +2370,7 @@ def run_clean_corpus_stream(
             bucket = (X.h56(F.col("text")) % 100).cast("int")
             uniq = F.coalesce(F.col("_u"), F.lit(False))
             kept = F.col("q_ok") & F.col("rep_ok") & F.col("con_ok") & uniq
-            out = flags.join(uniq_ids, "doc_id", "left").select(
+            rows = flags.join(uniq_ids, "doc_id", "left").select(
                 "doc_id",
                 "q_ok",
                 "rep_ok",
@@ -2599,7 +2386,7 @@ def run_clean_corpus_stream(
                 .otherwise("")
                 .alias("split"),
             )
-            _write_batch_partition(out, batch_id, output_dir)
+            ctx.write(out, rows)
             # Store (h, canonical doc_id) rows — first occurrences only
             # (r8; see the store_rows construction above).  The doc_id
             # makes the store FORGETTABLE (forget_docs_clean): dropping a
@@ -2607,19 +2394,13 @@ def run_clean_corpus_stream(
             # identical survivor becomes uniq again, which is CORRECT
             # post-deletion semantics (the content left the kept corpus
             # with its doc).
-            _write_batch_partition(
-                store_rows.select("h", "doc_id"), batch_id, hashes_dir
-            )
+            ctx.write(hashes, store_rows.select("h", "doc_id"))
         finally:
             corpus.unpersist()
             if flags is not None:
                 flags.unpersist()
 
-    return (
-        documents.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_incremental(documents, checkpoint_dir, [out, hashes], step)
 
 
 # --- O3: one input, three sinks ---------------------------------------------

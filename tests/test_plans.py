@@ -635,3 +635,26 @@ def test_olap_scan_memoization(spark, sf_dir):
     other = olap._scan(spark, f"{TESTDATA}/sf0.01", "nation")
     assert other is not a
     assert a.count() == other.count() == 25
+
+
+def test_distinct_exchange_count_reads_bracketed_partitioning(spark, monkeypatch):
+    # a partitioning expression with brackets (arr[0]) used to hide the
+    # exchange's plan_id, so the count read 0 and any budget passed
+    import pytest
+    from pyspark.sql import functions as F
+
+    from cloudcomputing_flink_application_spark.plans import inspect
+
+    df = (
+        spark.range(8)
+        .select(F.array(F.col("id"), F.col("id") + 1).alias("arr"))
+        .repartition(4, F.col("arr")[0])
+    )
+    assert "Exchange hashpartitioning" in physical_plan(df)
+    assert distinct_exchange_count(df) == 1
+    # an exchange whose id cannot be read is an error, not a zero
+    monkeypatch.setattr(
+        inspect, "physical_plan", lambda _df: "+- Exchange hashpartitioning(x#1, 4)\n"
+    )
+    with pytest.raises(ValueError, match="plan_id"):
+        distinct_exchange_count(df)

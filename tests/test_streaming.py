@@ -347,6 +347,41 @@ def test_avgspd_stream_last_row_carries_transition(spark, car_stream, tmp_path):
     assert out == batch == Counter([(0, 10, 12, 0, 0, 894)] * 2)
 
 
+def test_avgspd_stream_empty_tail_is_not_lost(spark, car_stream, tmp_path):
+    # A first batch with no measured (dir=0, seg 52/56) row carries an
+    # EMPTY tail; the next batch must read it as empty, not as lost.
+    unmeasured = [(0, 900, 10, 0, 0, 0, 10, 5000), (1, 900, 10, 0, 0, 0, 11, 5100)]
+    stream = car_stream([unmeasured, DATA_SMALL[:10], DATA_SMALL[10:]])
+    rows = unmeasured + DATA_SMALL
+    batch = average_speed_fines(spark.createDataFrame(rows, schema=schemas.CAR_REPORTS))
+    out = run_tail_stream(spark, jobs.average_speed_fines_stream, stream, batch.schema, tmp_path, "avg_empty")
+    assert rows_bag(out) == rows_bag(batch)
+    assert rows_set(out) == {(32, 36, 72, 0, 0, 225)}
+
+
+def test_tail_stream_refuses_a_lost_tail(spark, car_stream, tmp_path):
+    # Batch b needs the tail batch b-1 carried out; with that snapshot gone
+    # the batch cannot be computed exactly, so the query fails instead of
+    # starting over from an empty tail.
+    stream = car_stream([ACCIDENT_8[:3], ACCIDENT_8[3:5]])
+    chk = str(tmp_path / "acc_lost_chk")
+    q = jobs.accident_reports_stream(stream, str(tmp_path / "acc_lost"), chk)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    shutil.rmtree(f"{chk}/tail/batch_id=1")
+    write_files(str(tmp_path / "late"), csv_lines(ACCIDENT_8[5:]))
+    os.replace(str(tmp_path / "late" / "part-000.csv"), str(tmp_path / "cars" / "part-002.csv"))
+    os.utime(str(tmp_path / "cars" / "part-002.csv"), (1_700_000_002, 1_700_000_002))
+    q = jobs.accident_reports_stream(stream, str(tmp_path / "acc_lost"), chk)
+    with pytest.raises(Exception, match="is missing"):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+
 TAXI_CSV_TIE = """7,2022-03-05 10:00:00,2022-03-05 10:20:00,1.0,1.0,1.0,N,1,1,1,5.0,0.5,0.5,0.0,0.0,0.3,5.0,0.0,0.0
 7,2022-03-05 10:00:00,2022-03-05 10:05:00,1.0,1.0,1.0,N,1,1,1,5.0,0.5,0.5,0.0,0.0,0.3,5.0,0.0,0.0
 7,2022-03-05 10:12:00,2022-03-05 10:25:00,1.0,1.0,1.0,N,1,1,1,5.0,0.5,0.5,0.0,0.0,0.3,5.0,0.0,0.0
