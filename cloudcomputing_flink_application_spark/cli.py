@@ -1845,8 +1845,8 @@ def main(argv: list[str] | None = None) -> None:
             sp.add_argument(
                 "--shortlist-report", action="store_true",
                 help="print the auto-shortlist decision over the STORED "
-                "codes (n_vectors, top_blob, shortlist, compat_pinned, "
-                "clamped) — clamped=true means the largest near-dup blob "
+                "codes (n_vectors, top_blob, shortlist, clamped) — "
+                "clamped=true means the largest near-dup blob "
                 "outgrew PQ_SHORTLIST_CAP and the corpus needs "
                 "dedup-before-index; --input is ignored",
             )
@@ -1888,16 +1888,15 @@ def main(argv: list[str] | None = None) -> None:
             )
             sp.add_argument(
                 "--nprobe", type=int, default=None,
-                help="IVF cells probed per query (default: auto-sized "
-                "from the top near-dup blob's measured cell spread over "
-                "the stored index rows, floored at the operator's "
-                "NPROBE)",
+                help="IVF cells probed per query (default: the top "
+                "near-dup blob's measured cell spread over the stored "
+                "index rows + 1, floored at the operator's NPROBE)",
             )
             sp.add_argument(
                 "--shortlist", type=int, default=None,
                 help="ADC shortlist size for the exact rerank (default: "
-                "auto-sized from the stored codes' measured near-dup "
-                "blob density, floored at the operator's PQ_SHORTLIST)",
+                "the stored codes' largest near-identical code group + "
+                "the operator's PQ_SHORTLIST, capped at PQ_SHORTLIST_CAP)",
             )
             sp.add_argument(
                 "--corpus", default=None,

@@ -524,8 +524,9 @@ def minhash_lsh_dedup(documents: DataFrame) -> DataFrame:
     # tokenize->md5->MinHash pipeline recomputes ~4x (measured: 30% of the
     # whole bench).  Cached frames are tiny relative to the corpus (arrays of
     # 56-bit longs / 3-int band rows); MEMORY_AND_DISK spills under pressure,
-    # and the CacheManager dedups by canonical plan so repeated calls (or the
-    # cluster variant below) share entries instead of stacking copies.
+    # and the CacheManager dedups by canonical plan so repeated calls share
+    # entries instead of stacking copies (the cluster variants persist a
+    # different plan — see _verified_star_edges).
     # Collapse by TOKEN SET instead of by exact text (r15 — see
     # _tokset_groups): banding, the size prune, and the jaccard verify
     # are all functions of the tokset alone, so the pipeline sees one
@@ -791,9 +792,10 @@ def _verified_star_edges(documents: DataFrame) -> DataFrame:
     """
     # Same persist rationale as minhash_lsh_dedup: the hashed token-set
     # frame feeds the band pipeline once and the ta/tb verify sides
-    # twice (one md5 pass total — see _hashed_token_sets); the cached
-    # plan is identical to the LSH variant's, so a session running both
-    # shares ONE cache entry.
+    # twice (one md5 pass total — see _hashed_token_sets).  The cached
+    # plan hashes the per-document token sets, while minhash_lsh_dedup
+    # hashes its tokset-group representatives, so a session running
+    # both holds TWO cache entries.
     toks = _persist(_hashed_token_sets(_token_sets(documents)))
     star = star_edges_from_bands(band_rows_from_toksets(toks))
     return jaccard_verified_edges(star, toks)
@@ -2565,8 +2567,8 @@ def semantic_dedup(embeddings: DataFrame, tau: float = SEMANTIC_COS) -> DataFram
     components that HAVE edges (singletons never enter the shuffle).
 
     Scale envelope (the paper's own): within-cluster pairing costs
-    O(sum c_i^2) = O(n^2 / K) comparisons; ``auto_subk`` grows K ~ sqrt(n)
-    past the compat threshold, so the total tracks O(n^1.5) — the same
+    O(sum c_i^2) = O(n^2 / K) comparisons; ``auto_subk`` grows K ~ sqrt(n),
+    so the total tracks O(n^1.5) — the same
     envelope as the IVF probe scan, distributed over cluster-keyed
     shuffle partitions (AQE splits a skewed cell's join side; a
     corpus-scale degenerate blob belongs to ``embedding_purge_dedup``
@@ -2692,10 +2694,10 @@ def semantic_purge_dedup(
 
 
 def _semantic_dedup_sql(tau: float = SEMANTIC_COS) -> str:
-    """DuckDB oracle for ``semantic_dedup`` — mirrors the compat regime of
-    the tested SFs (subk = SUBK, the same pinned-literal convention as
-    KMEANS_CODEBOOK_SQL), with the recursive-walk closure MINHASH_CC_SQL
-    established."""
+    """DuckDB oracle for ``semantic_dedup`` — the shared seed codebook
+    CTE (which sizes subk with ``auto_subk``'s rule from the table
+    itself, as KMEANS_CODEBOOK_SQL does), with the recursive-walk
+    closure MINHASH_CC_SQL established."""
     from cloudcomputing_flink_application_spark.operators.similarity import (
         KMEANS_SCALE,
         _SEEDS_CTE,

@@ -44,7 +44,7 @@ from cloudcomputing_flink_application_spark.functions import text as X
 
 TOPK = 5
 NPROBE = 40  # of the K = 10 labels x SUBK clusters (see module docstring)
-SUBK = 5  # sub-centroids per label at tested SFs (coarse level = label)
+SUBK = 5  # floor of auto_subk, sub-centroids per label (coarse level = label)
 SEED_OVERSAMPLE = 8  # hash prefilter keeps ~SUBK*OVERSAMPLE candidates/label
 QUERY_STRIDE = 100  # vec_id % STRIDE == 0 -> query vector
 
@@ -54,13 +54,12 @@ QUERY_STRIDE = 100  # vec_id % STRIDE == 0 -> query vector
 #: PER PROBED LIST no matter what nprobe is.  Per-query IVF work is
 #: ~K (rank the centroids) + nprobe * n/K (scan the probed lists); the
 #: sum is minimized at K ~ sqrt(n) — the classic IVF sizing rule — which
-#: also sends the probe fraction nprobe/K to 0 as the corpus grows.  At
-#: or below the compat threshold the fixed SUBK=5 tested-SF layout
-#: applies unchanged, pinning every driver-SF oracle hash (n <= 2000 at
-#: sf0.1, and the oracle's _SEEDS_CTE hardcodes SUBK); above it,
-#: subk = ceil(ceil(sqrt(n)) / |labels|) so K = |labels| * subk tracks
-#: sqrt(n).  Same cheap-count pattern as dedup.auto_band_width.
-IVF_AUTO_COMPAT_N = 4096
+#: also sends the probe fraction nprobe/K to 0 as the corpus grows.  One
+#: rule at every size: subk = ceil(ceil(sqrt(n)) / |labels|), floored at
+#: SUBK, so K = |labels| * subk tracks sqrt(n) (every tested SF, n <= 2000
+#: over 10 labels, lands on the SUBK floor).  The oracles' _SEEDS_CTE
+#: computes the same rule from its own tables.
+#:
 #: cluster = label * 1000 + rank reserves three decimal digits for rank —
 #: the NARROW encoding every persisted index below the clamp uses, kept
 #: bit-identical forever.  At subk = 999 with K ~ sqrt(n) that bound is
@@ -142,45 +141,36 @@ def _decode_label(cluster: Column) -> Column:
 
 
 def auto_subk(n: int, n_labels: int) -> int:
-    """Sub-centroids per label for an ``n``-vector corpus.
-
-    <= IVF_AUTO_COMPAT_N: the fixed tested-SF SUBK (oracle-pinned).
-    Above: ceil(ceil(sqrt(n)) / n_labels), clamped to [SUBK,
+    """Sub-centroids per label for an ``n``-vector corpus:
+    ceil(ceil(sqrt(n)) / n_labels), clamped to [SUBK,
     IVF_WIDE_RANK_BASE - 1] — K = n_labels * subk ~ sqrt(n), monotone in
     n.  Past subk = IVF_MAX_SUBK the cluster-id encoding widens
     (``_encode_cluster``), so the rule keeps tracking sqrt(n) through
     n ~ 10^16 at 10 labels instead of saturating at 10^8 (r9; the old
     clamp was the last point where K stopped growing)."""
-    if n <= IVF_AUTO_COMPAT_N:
-        return SUBK
     k_target = math.isqrt(max(n - 1, 0)) + 1  # ceil(sqrt(n)), exact ints
     per_label = -(-k_target // max(n_labels, 1))  # ceil div
     return max(SUBK, min(IVF_WIDE_RANK_BASE - 1, per_label))
 
 
 def _corpus_sizing(embeddings: DataFrame) -> tuple[int, int]:
-    """(n, auto subk) from cheap aggregates over the corpus — on a
-    cluster this would come from table statistics; the aggregate is the
-    local stand-in.  The shared sizing read for every codebook consumer
+    """(n, auto subk) from one aggregate over the corpus — on a cluster
+    this would come from table statistics; the aggregate is the local
+    stand-in.  The shared sizing read for every codebook consumer
     (dedup.semantic_dedup included), so the n/label conventions can
     never diverge per caller.
 
-    r14 optimization round (guide §1.2): ``auto_subk`` ignores the label
-    count at or below IVF_AUTO_COMPAT_N (the compat branch returns SUBK
-    unconditionally), so the distinct-label aggregate — a two-phase
-    expand the plain count doesn't need — only runs when the corpus is
-    big enough for it to matter.  Same (n, subk) for every input."""
-    n = int(embeddings.agg(F.count("*").alias("n")).first()["n"])
-    if n <= IVF_AUTO_COMPAT_N:
-        return n, auto_subk(n, 1)
-    nl = int(
-        embeddings.agg(F.countDistinct("label").alias("nl")).first()["nl"] or 0
-    )
-    return n, auto_subk(n, max(nl, 1))
+    The label count is the size of the label set, not a countDistinct:
+    the set merges map-side in the count's own exchange, where
+    countDistinct adds an expand and a second shuffle (one more Spark
+    job per call).  The set is as small as the per-label count frame
+    ``_twolevel_seeds`` already broadcasts."""
+    row = embeddings.agg(
+        F.count("*").alias("n"), F.size(F.collect_set("label")).alias("nl")
+    ).first()
+    n = int(row["n"])
+    return n, auto_subk(n, max(int(row["nl"]), 1))
 
-
-def _auto_subk_for(embeddings: DataFrame) -> int:
-    return _corpus_sizing(embeddings)[1]
 
 #: Frames persisted by the operators below — same caching contract as
 #: ``operators.dedup``: operators return lazy frames, so release happens
@@ -473,13 +463,12 @@ def ivf_codebook(embeddings: DataFrame, subk: int | None = None) -> DataFrame:
     artifact ``cosine_topk_ivf`` builds when none is supplied.
 
     ``subk=None`` (the default) sizes the codebook with the corpus via
-    :func:`auto_subk` — K = |labels| * subk tracks ~sqrt(n) above the
-    compat threshold, so the probe fraction nprobe/K keeps shrinking as
-    the corpus grows instead of every inverted list fattening linearly.
-    Every tested SF (n <= 2000) keeps the exact SUBK=5 layout, so the
-    registry oracles are bit-unchanged.  Explicit ``subk`` overrides."""
+    :func:`auto_subk` — K = |labels| * subk tracks ~sqrt(n), so the
+    probe fraction nprobe/K keeps shrinking as the corpus grows instead
+    of every inverted list fattening linearly.  Explicit ``subk``
+    overrides."""
     if subk is None:
-        subk = _auto_subk_for(embeddings)
+        subk = _corpus_sizing(embeddings)[1]
     return _twolevel_seeds(_normed(embeddings), subk)
 
 
@@ -583,7 +572,7 @@ def cosine_topk_ivf(
     centroids = (
         codebook
         if codebook is not None
-        else _persist(_twolevel_seeds(base, _auto_subk_for(embeddings)))
+        else _persist(_twolevel_seeds(base, _corpus_sizing(embeddings)[1]))
     )
     # assignment: every vector -> nearest centroid (cos desc, cluster asc).
     # At production scale ``assigned`` is the one-time IVF index artifact
@@ -670,7 +659,7 @@ def ivf_kmeans_codebook(embeddings: DataFrame, iters: int = 1) -> DataFrame:
     # <= K rows; release_cached() drops them.  Caller-supplied codebooks
     # (cosine_topk_ivf(codebook=...)) remain the CALLER's to persist —
     # see that operator's no-leak note.
-    centroids = _persist(_twolevel_seeds(base, _auto_subk_for(embeddings)))
+    centroids = _persist(_twolevel_seeds(base, _corpus_sizing(embeddings)[1]))
     sums = None
     for it in range(iters):
         assigned = _assign_to_centroids(base, centroids)
@@ -750,26 +739,39 @@ def refined_codebook(embeddings: DataFrame, iters: int = 1) -> DataFrame:
     return dequantize_codebook(ivf_kmeans_codebook(embeddings, iters=iters))
 
 
-#: Shared oracle CTE: the deterministic two-level seed codebook (label x
-#: SUBK hash-sampled sub-centroids), mirroring ``_twolevel_seeds``.
-_SEEDS_CTE = f"""
-counts AS (SELECT label, count(*) AS n_label FROM e GROUP BY label),
-cand AS (
-  SELECT e.label, e.vec_id, e.emb, e.nrm, n_label,
-         {X.h56_sql('CAST(e.vec_id AS VARCHAR)')} AS h
-  FROM e JOIN counts USING (label)
+def _seeds_cte(src: str = "e", p: str = "") -> str:
+    """Oracle CTEs for the deterministic two-level seed codebook (label x
+    subk hash-sampled sub-centroids) over the normed frame ``src``,
+    mirroring ``_twolevel_seeds``; ``p`` prefixes every CTE name so the
+    IVFADC oracle can compose them with the PQ prelude.  ``sizing``
+    states :func:`auto_subk` over the raw ``embeddings`` table."""
+    h = X.h56_sql(f"CAST({src}.vec_id AS VARCHAR)")
+    return f"""
+{p}sizing AS (
+  SELECT CAST(greatest({SUBK}, ceil(ceil(sqrt(count(*)))
+                / greatest(count(DISTINCT label), 1))) AS BIGINT) AS subk
+  FROM embeddings
 ),
-ranked_seeds AS (
-  SELECT label, vec_id, emb, nrm,
+{p}counts AS (SELECT label, count(*) AS n_label FROM {src} GROUP BY label),
+{p}cand AS (
+  SELECT {src}.label, {src}.vec_id, {src}.emb, {src}.nrm, n_label, subk,
+         {h} AS h
+  FROM {src} JOIN {p}counts USING (label) CROSS JOIN {p}sizing
+),
+{p}ranked_seeds AS (
+  SELECT label, vec_id, emb, nrm, subk,
          row_number() OVER (PARTITION BY label ORDER BY h, vec_id) AS rk
-  FROM cand
-  WHERE (h >> 28) * n_label < {SUBK * SEED_OVERSAMPLE * (1 << 28)}
+  FROM {p}cand
+  WHERE (h >> 28) * n_label < subk * {SEED_OVERSAMPLE * (1 << 28)}
 ),
-centroids AS (
+{p}centroids AS (
   SELECT label, CAST(label AS BIGINT) * 1000 + rk AS cluster,
          emb AS cemb, nrm AS cnrm
-  FROM ranked_seeds WHERE rk <= {SUBK}
+  FROM {p}ranked_seeds WHERE rk <= subk
 )"""
+
+
+_SEEDS_CTE = _seeds_cte()
 
 
 KMEANS_CODEBOOK_SQL = f"""
@@ -1227,8 +1229,8 @@ PQ_SHORTLIST = 50  # ADC shortlist size for the rerank stage: measured on
 # so a fixed shortlist was the one scale constant a 100 TB operator had
 # to hand-tune (r9 VERDICT #1).  ``auto_shortlist`` below removes the
 # knob the same way auto_band_width (r6) and auto_subk (r8) removed
-# theirs: derive it from a measured density statistic, compat-pinned at
-# the tested SFs.
+# theirs: derive it from a measured density statistic, one rule at every
+# corpus size.
 PQ_SHORTLIST_CAP = 8192  # auto-shortlist ceiling: the shortlist frame
 # (|queries| x shortlist rows) broadcasts into the rerank equi-join, so
 # it must stay broadcast-sized no matter what the density estimate says.
@@ -1259,22 +1261,17 @@ IVFPQ_SPREAD_SALT = 8
 RERANK_BROADCAST_MAX_ROWS = 4_000_000
 
 
-def auto_shortlist(n: int, top_blob: int) -> int:
-    """Rerank shortlist size for an ``n``-vector corpus whose largest
-    near-duplicate blob holds ``top_blob`` vectors.
-
-    <= IVF_AUTO_COMPAT_N: the fixed tested-SF PQ_SHORTLIST (oracle-
-    pinned, the auto_subk compat pattern — every driver-SF hash is
-    bit-unchanged because every tested corpus sits under the floor).
-    Above: ``top_blob + PQ_SHORTLIST``, clamped to [PQ_SHORTLIST,
+def auto_shortlist(top_blob: int) -> int:
+    """Rerank shortlist size for a corpus whose largest near-duplicate
+    blob holds ``top_blob`` vectors (0 for the empty corpus):
+    ``top_blob + PQ_SHORTLIST``, clamped to [PQ_SHORTLIST,
     PQ_SHORTLIST_CAP] — ADC cannot rank WITHIN a blob (its members
-    share code words, so their ADC scores tie), which means the exact
+    share most of their code words, so their ADC scores tie or nearly
+    tie; :func:`_blob_stats` measures it), which means the exact
     rerank can only restore order over candidates the shortlist kept;
     a shortlist >= the blob keeps the whole blob eligible, and the
     +PQ_SHORTLIST margin preserves the baseline breadth beyond it.
     Monotone in ``top_blob``."""
-    if n <= IVF_AUTO_COMPAT_N:
-        return PQ_SHORTLIST
     return max(PQ_SHORTLIST, min(PQ_SHORTLIST_CAP, int(top_blob) + PQ_SHORTLIST))
 
 
@@ -1284,14 +1281,12 @@ def auto_shortlist(n: int, top_blob: int) -> int:
 NPROBE_BLOB_MARGIN = 1
 
 
-def auto_nprobe(n: int, blob_cells: int) -> int:
-    """Probe count for an ``n``-vector corpus whose largest near-dup
-    blob spans ``blob_cells`` DISTINCT IVF cells — the serving twin of
+def auto_nprobe(blob_cells: int) -> int:
+    """Probe count for a corpus whose largest near-dup blob spans
+    ``blob_cells`` DISTINCT IVF cells — the serving twin of
     :func:`auto_shortlist` (r11, VERDICT r10 #4).
 
-    <= IVF_AUTO_COMPAT_N: the fixed tested-SF NPROBE (oracle-pinned,
-    the same compat pattern as every other auto rule).  Above: NPROBE
-    stays the FLOOR — the module's measured doctrine holds (on
+    NPROBE stays the FLOOR — the module's measured doctrine holds (on
     clustered data the neighborhood geometry, not K, sets the needed
     probe count; recall held 1.00 as K grew with fixed 40) — and the
     blob term raises it only when the measured spread says the floor
@@ -1303,81 +1298,60 @@ def auto_nprobe(n: int, blob_cells: int) -> int:
     auto_shortlist fixed one stage later.  Monotone in ``blob_cells``;
     never below the measured floor, so corpora without blob spread keep
     the current recall at the current scan fraction."""
-    if n <= IVF_AUTO_COMPAT_N:
-        return NPROBE
     return max(NPROBE, int(blob_cells) + NPROBE_BLOB_MARGIN)
 
 
-def _blob_stats(coded: DataFrame) -> tuple[int, int, int]:
-    """(n, top_blob, blob_cells) from ONE partial-agg pass over
-    (cluster, codes) index rows: corpus size, the top multiplicity of
-    identical code words (:func:`auto_shortlist`'s statistic), and the
-    DISTINCT IVF cells that top code word's rows span
-    (:func:`auto_nprobe`'s).  The fused form of :func:`_code_blob_stats`
-    for frames that carry the cluster column — the IVFADC paths make
-    both auto decisions from one aggregate instead of two passes.
-    Ties on multiplicity resolve to the larger cell spread (max of the
-    (cnt, cells) struct — deterministic, and the conservative probe)."""
+def _near_code_keys(codes: Column) -> Column:
+    """The keys under which one code row counts toward a blob: for codes
+    of m >= 8 subspaces, its code word (as strings) with each pair of
+    subspaces masked to ``*`` — the masked positions are part of the
+    key, so two pairs never collide.  Shorter codes keep the one exact
+    code word (the mask (-1, -1) matches no position)."""
+    m = F.size(codes)
+    pairs = F.flatten(F.transform(
+        F.sequence(F.lit(0), m - 2),
+        lambda i: F.transform(F.sequence(i + 1, m - 1), lambda j: F.array(i, j)),
+    ))
+    masks = F.when(m >= 8, pairs).otherwise(F.array(F.array(F.lit(-1), F.lit(-1))))
+    return F.transform(masks, lambda p: F.transform(
+        codes, lambda x, k: F.when((k == p[0]) | (k == p[1]), "*").otherwise(x.cast("string"))
+    ))
+
+
+def _blob_stats(coded: DataFrame, col: str = "codes") -> tuple[int, int, int]:
+    """(n, top_blob, blob_cells) from ONE partial-agg pass over PQ code
+    rows: corpus size, the largest set of rows sharing a
+    :func:`_near_code_keys` key (:func:`auto_shortlist`'s statistic),
+    and the DISTINCT IVF cells it spans (:func:`auto_nprobe`'s; 0
+    without a ``cluster`` column).  ``col`` is the code column: an array,
+    or the stored ``code_csv`` string.  Ties on size resolve to the
+    larger cell spread (the conservative probe).
+
+    Why near-identical code words: ADC cannot rank apart members whose
+    codes agree in most subspaces.  An exact near-dup blob quantizes to
+    ONE code word (1654 read on a 1600-member blob, SCALING.md pq), but
+    a Gaussian blob splits across the sub-centroids each subspace gives
+    it: on 2000 vectors in 10 blobs of ~220 (m = 8, ksub = 16, ten
+    seeds) identical words read 54-158 and recall@5 0.72-1.00, any 6 of
+    8 subspaces read 151-198 and recall >= 0.99.  Never below the
+    identical-word count; on uniform codes it stays near 1."""
+    codes = F.split(col, ",") if dict(coded.dtypes)[col] == "string" else F.col(col)
+    cluster = F.col("cluster") if "cluster" in coded.columns else F.lit(None)
     row = (
-        coded.groupBy("codes")
+        coded.select(codes.alias("codes"), cluster.alias("cluster"))
+        .select(F.posexplode(_near_code_keys(F.col("codes"))).alias("pos", "key"), "cluster")
+        .groupBy("key")
         .agg(
             F.count("*").alias("cnt"),
-            F.countDistinct("cluster").alias("cells"),
+            F.count(F.when(F.col("pos") == 0, 1)).alias("rows"),
+            F.size(F.collect_set("cluster")).alias("cells"),
         )
-        .agg(
-            F.sum("cnt").alias("n"),
-            F.max(F.struct("cnt", "cells")).alias("top"),
-        )
+        .agg(F.sum("rows").alias("n"), F.max(F.struct("cnt", "cells")).alias("top"))
         .first()
     )
     if row is None or row["n"] is None:
         return (0, 0, 0)
     return (int(row["n"]), int(row["top"]["cnt"]), int(row["top"]["cells"]))
-
-
-def _code_blob_stats(coded: DataFrame, col: str = "codes") -> tuple[int, int]:
-    """(corpus size, top multiplicity of identical code words) from one
-    partial-agg pass over PQ code rows — the ONE aggregate behind both
-    the live auto-shortlist rule and :func:`shortlist_report` (r10
-    review: two inline copies could drift).  ``col`` is the code column
-    — the array form in the search paths, the stored ``code_csv``
-    string in the report (identical multiplicities either way)."""
-    row = (
-        coded.groupBy(col)
-        .agg(F.count("*").alias("cnt"))
-        .agg(F.sum("cnt").alias("n"), F.max("cnt").alias("top"))
-        .first()
-    )
-    if row is None or row["n"] is None:
-        return (0, 0)
-    return (int(row["n"]), int(row["top"]))
-
-
-def _floor_shortlist(n: int, top_blob: int) -> int:
-    """The ONE empty-corpus fallback for shortlist auto-sizing (r11
-    review: the ``if n`` branch had been inlined in three callers plus
-    the helper below — four copies of the same rule)."""
-    return auto_shortlist(n, top_blob) if n else PQ_SHORTLIST
-
-
-def _auto_shortlist_for(coded: DataFrame) -> int:
-    """``auto_shortlist`` from one aggregate over a frame of PQ code
-    rows (a ``codes`` column, one row per indexed vector): the corpus
-    size and the top multiplicity of IDENTICAL code words.
-
-    Why code multiplicity is the right density statistic: a near-dup
-    blob's members quantize to the same code word at any practical ksub
-    (measured, SCALING.md pq), so the top multiplicity IS the largest
-    set of candidates ADC cannot separate — the quantity that overflows
-    the shortlist.  Measured on the r9 regimes: 1654 on the
-    1600-member-blob corpus, 167 on the 160-member density-controlled
-    one (blob size recovered within ~4%), where the IVF top-cell
-    occupancy under-reads the blob 2x (779) because K ~ sqrt(n)
-    fragments blobs across cells.  Cost: one partial-agg groupBy that
-    collapses identical codes map-side — tiny on blob-heavy corpora,
-    one narrow pass of m-byte rows on uniform ones; the from-index path
-    estimates from the stored codes (no encode pass)."""
-    return _floor_shortlist(*_code_blob_stats(coded))
 
 
 def _pq_slice(emb: Column, sub: Column | int, m: int) -> Column:
@@ -1856,9 +1830,8 @@ def pq_topk_rerank(
     measured near-dup blob density (:func:`auto_shortlist` over the
     encoded codes — one extra stats pass sharing the search's own
     encode lineage; a deployment estimates from its stored codes for
-    free).  Compat-pinned: at or below IVF_AUTO_COMPAT_N vectors the
-    fixed PQ_SHORTLIST applies unchanged, so every tested-SF result is
-    bit-identical to an explicit shortlist=PQ_SHORTLIST call.
+    free).  Every corpus with a code word gets more than PQ_SHORTLIST:
+    the rule is its largest near-identical code group + PQ_SHORTLIST.
 
     Duplicate-id contract (shared by every IN-MEMORY search operator
     here — cosine_topk, cosine_topk_ivf, pq_topk, this one): the caller
@@ -1898,7 +1871,7 @@ def pq_topk_rerank(
         enc = _persist(
             _pq_encoded(_normed(embeddings), packed, m)
         )
-        shortlist = max(k, _floor_shortlist(*_code_blob_stats(enc.select("codes"))))
+        shortlist = max(k, auto_shortlist(_blob_stats(enc.select("codes"))[1]))
         # exact stride-sample size from the PERSISTED compact rows (one
         # cached narrow scan — the n//STRIDE estimate under-counts up
         # to 100x on an id space correlated with the stride, r11
@@ -2079,8 +2052,9 @@ GROUP BY e.vec_id, len(e.emb)
 _PQ_ONES = "[" + ", ".join(["1.0"] * PQ_M) + "]"
 
 
-def _pq_topk_sql(k: int) -> str:
-    """The ADC top-k oracle parameterized on k — PQ_TOPK_SQL is the
+def _pq_topk_sql(k: int | str) -> str:
+    """The ADC top-k oracle parameterized on k (a literal, or a scalar
+    SQL expression over the prelude's CTEs) — PQ_TOPK_SQL is the
     registry-default instance; the rerank oracle composes the
     shortlist-sized one."""
     return f"""
@@ -2116,9 +2090,33 @@ SELECT query_id, neighbor_id, rank, adc FROM ranked WHERE rank <= {k}
 PQ_TOPK_SQL = _pq_topk_sql(TOPK)
 
 
+#: The oracles' blob keys (:func:`_near_code_keys` stated over the PQ
+#: prelude's ``enc`` rows, aliased ``en``): each code word with every
+#: pair of its subspaces masked, as for any code of PQ_M = 8 subspaces.
+_BLOB_KEY_SQL = """string_agg(CASE WHEN en.sub IN (bm.i, bm.j) THEN '*'
+                           ELSE CAST(en.code AS VARCHAR) END, ',' ORDER BY en.sub)"""
+_BLOB_MASKS_SQL = """(SELECT a.sub AS i, b.sub AS j
+   FROM (SELECT DISTINCT sub FROM enc) a
+   JOIN (SELECT DISTINCT sub FROM enc) b ON a.sub < b.sub) bm"""
+
+
+#: The rerank oracle's shortlist, :func:`auto_shortlist` over the
+#: largest blob key's count plus PQ_SHORTLIST, capped.
+_PQ_AUTO_SHORTLIST_SQL = f"""(
+  SELECT least({PQ_SHORTLIST_CAP}, coalesce(max(cnt), 0) + {PQ_SHORTLIST})
+  FROM (
+    SELECT count(*) AS cnt FROM (
+      SELECT {_BLOB_KEY_SQL} AS key
+      FROM enc en CROSS JOIN {_BLOB_MASKS_SQL}
+      GROUP BY en.vec_id, bm.i, bm.j
+    ) GROUP BY key
+  )
+)"""
+
+
 PQ_TOPK_RERANK_SQL = f"""
 WITH short AS (
-  SELECT query_id, neighbor_id FROM ({_pq_topk_sql(PQ_SHORTLIST)})
+  SELECT query_id, neighbor_id FROM ({_pq_topk_sql(_PQ_AUTO_SHORTLIST_SQL)})
 ),
 e2 AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb,
@@ -2216,7 +2214,7 @@ def ivfpq_index(
     cents = (
         codebook
         if codebook is not None
-        else _persist(_twolevel_seeds(base, _auto_subk_for(embeddings)))
+        else _persist(_twolevel_seeds(base, _corpus_sizing(embeddings)[1]))
     )
     pq_codes = (
         pq_cb if pq_cb is not None else _pq_train(embeddings, m, ksub, iters)[0]
@@ -2260,8 +2258,7 @@ def ivfpq_topk(
     instruments price each stage).  ``shortlist=None`` auto-sizes from
     the index's own code rows (:func:`auto_shortlist`) and
     ``nprobe=None`` from the top blob's measured cell spread
-    (:func:`auto_nprobe`) — one fused stats pass (:func:`_blob_stats`),
-    both compat-pinned at tested SFs."""
+    (:func:`auto_nprobe`) — one fused stats pass (:func:`_blob_stats`)."""
     if k < 1 or (shortlist is not None and k > shortlist):
         raise ValueError(
             f"need 1 <= k <= shortlist, got k={k} shortlist={shortlist}"
@@ -2269,7 +2266,7 @@ def ivfpq_topk(
     if nprobe is not None and nprobe < 1:
         raise ValueError(f"need nprobe >= 1, got {nprobe}")
     base = _normed(embeddings)
-    cents = _persist(_twolevel_seeds(base, _auto_subk_for(embeddings)))
+    cents = _persist(_twolevel_seeds(base, _corpus_sizing(embeddings)[1]))
     # consumed twice — once by this operator's LUT packing and once by
     # ivfpq_index's own packing — so an unpersisted codebook would run
     # the whole Lloyd lineage twice (<= m*ksub rows cached)
@@ -2292,11 +2289,11 @@ def ivfpq_topk(
         # lineage would run the assignment-join + encode twice (r10
         # review); both auto decisions read the ONE fused stats pass
         coded = _persist(coded)
-        n_corpus, top_blob, blob_cells = _blob_stats(coded)
+        _, top_blob, blob_cells = _blob_stats(coded)
         if shortlist is None:
-            shortlist = max(k, _floor_shortlist(n_corpus, top_blob))
+            shortlist = max(k, auto_shortlist(top_blob))
         if nprobe is None:
-            nprobe = auto_nprobe(n_corpus, blob_cells)
+            nprobe = auto_nprobe(blob_cells)
     queries = _normed(
         embeddings.filter(F.col("vec_id") % QUERY_STRIDE == 0), spread=False
     ).select(
@@ -2594,13 +2591,13 @@ def ivfpq_topk_from_index(
         # (r11: the estimate moved from the codes store alone to the
         # JOINED rows so nprobe can read the blob's cell spread in the
         # same pass; both-store membership is already the serving
-        # contract, so the multiplicity statistic is unchanged.)
+        # contract, so the blob statistic is unchanged.)
         coded = _persist(coded)
-        n_corpus, top_blob, blob_cells = _blob_stats(coded)
+        _, top_blob, blob_cells = _blob_stats(coded)
         if shortlist is None:
-            shortlist = max(k, _floor_shortlist(n_corpus, top_blob))
+            shortlist = max(k, auto_shortlist(top_blob))
         if nprobe is None:
-            nprobe = auto_nprobe(n_corpus, blob_cells)
+            nprobe = auto_nprobe(blob_cells)
     packed = _persist(_pq_packed(read_pq_codebook(spark, pq_root)))
     # NO corpus-wide dropDuplicates here: shuffling the full-width
     # embedding arrays to dedup the rerank side cost 5x at 80k vectors
@@ -2655,8 +2652,8 @@ def ivfpq_topk_from_index(
 
 
 #: IVF-side oracle CTEs for the IVFADC composition, renamed i* to compose
-#: with the PQ prelude in one WITH clause (same seed/assignment SQL as
-#: _SEEDS_CTE / COSINE_TOPK_IVF_SQL, over an e2 that keeps label + nrm).
+#: with the PQ prelude in one WITH clause (the _seeds_cte codebook and
+#: COSINE_TOPK_IVF_SQL's assignment, over an e2 that keeps label + nrm).
 _IVFPQ_IVF_CTE = f"""
 e2 AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS emb,
@@ -2664,23 +2661,7 @@ e2 AS (
   FROM embeddings
   WHERE sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) > 0
 ),
-icounts AS (SELECT label, count(*) AS n_label FROM e2 GROUP BY label),
-icand AS (
-  SELECT e2.label, e2.vec_id, e2.emb, e2.nrm, n_label,
-         {X.h56_sql('CAST(e2.vec_id AS VARCHAR)')} AS h
-  FROM e2 JOIN icounts USING (label)
-),
-iranked AS (
-  SELECT label, vec_id, emb, nrm,
-         row_number() OVER (PARTITION BY label ORDER BY h, vec_id) AS rk
-  FROM icand
-  WHERE (h >> 28) * n_label < {SUBK * SEED_OVERSAMPLE * (1 << 28)}
-),
-icentroids AS (
-  SELECT label, CAST(label AS BIGINT) * 1000 + rk AS cluster,
-         emb AS cemb, nrm AS cnrm
-  FROM iranked WHERE rk <= {SUBK}
-),
+{_seeds_cte('e2', 'i').strip()},
 iasg AS (
   SELECT e2.vec_id, e2.emb, e2.nrm, c.cluster,
          row_number() OVER (PARTITION BY e2.vec_id
@@ -2710,6 +2691,22 @@ q AS (
   SELECT vec_id AS query_id, emb AS qemb, nrm AS qnrm
   FROM e2 WHERE vec_id % {QUERY_STRIDE} = 0
 ),
+ikeys AS (
+  SELECT a.cluster, {_BLOB_KEY_SQL} AS key
+  FROM iassigned a JOIN enc en ON en.vec_id = a.vec_id
+  CROSS JOIN {_BLOB_MASKS_SQL}
+  GROUP BY a.vec_id, a.cluster, bm.i, bm.j
+),
+itop AS (
+  SELECT count(*) AS cnt, count(DISTINCT cluster) AS cells
+  FROM ikeys GROUP BY key
+  ORDER BY cnt DESC, cells DESC LIMIT 1
+),
+iauto AS (
+  SELECT least({PQ_SHORTLIST_CAP}, coalesce(max(cnt), 0) + {PQ_SHORTLIST}) AS shortlist,
+         greatest({NPROBE}, coalesce(max(cells), 0) + {NPROBE_BLOB_MARGIN}) AS nprobe
+  FROM itop
+),
 probes AS (
   SELECT query_id, qemb, cluster
   FROM (
@@ -2718,7 +2715,7 @@ probes AS (
                               ORDER BY list_dot_product(cemb, qemb) / (cnrm * qnrm) DESC,
                                        cluster ASC) AS prank
     FROM q CROSS JOIN icentroids
-  ) WHERE prank <= {NPROBE}
+  ) WHERE prank <= (SELECT nprobe FROM iauto)
 ),
 persub AS (
   SELECT p.query_id, a.vec_id, en.sub,
@@ -2743,7 +2740,7 @@ short AS (
            row_number() OVER (PARTITION BY query_id
                               ORDER BY adc DESC, neighbor_id ASC) AS srank
     FROM adcs
-  ) WHERE srank <= {PQ_SHORTLIST}
+  ) WHERE srank <= (SELECT shortlist FROM iauto)
 ),
 rescored AS (
   SELECT s.query_id, s.neighbor_id,
@@ -2918,7 +2915,7 @@ def read_pq_codebook(spark, index_root: str) -> DataFrame:
 def shortlist_report(spark, pq_root: str) -> DataFrame:
     """One-row instrument for the auto-shortlist decision over a built
     PQ root's CURRENT codes store (latest-wins, like every serving
-    read): ``(n_vectors, top_blob, shortlist, compat_pinned, clamped)``.
+    read): ``(n_vectors, top_blob, shortlist, clamped)``.
 
     This is the observability half of :func:`auto_shortlist` — the rule
     itself runs silently inside every default-shortlist search, and its
@@ -2927,9 +2924,7 @@ def shortlist_report(spark, pq_root: str) -> DataFrame:
     with nothing in the query output saying so.  ``clamped=true`` here
     IS that signal — the corpus is past what shortlist sizing absorbs
     and needs dedup-before-index (run ``pq_recall_report`` to price the
-    damage).  ``compat_pinned=true`` means the corpus sits at or below
-    IVF_AUTO_COMPAT_N and the fixed tested-SF shortlist applies.
-    Cost: the same one aggregate the auto rule runs at query time."""
+    damage).  Cost: the same one aggregate the auto rule runs at query time."""
     import os
 
     if pq_build_params(spark, pq_root) is None:
@@ -2947,17 +2942,14 @@ def shortlist_report(spark, pq_root: str) -> DataFrame:
             "then report"
         )
     codes = _latest_per_vec(spark.read.parquet(f"{pq_root}/codes"), "code_csv")
-    n, top = _code_blob_stats(codes, "code_csv")
-    sl = auto_shortlist(n, top)
+    n, top, _ = _blob_stats(codes, "code_csv")
+    sl = auto_shortlist(top)
     # clamped = the rule WOULD have sized past the cap (top + the
     # PQ_SHORTLIST margin — auto_shortlist's own formula — exceeds it);
     # the cap test in tests/test_pq.py pins this against the live rule
     return spark.createDataFrame(
-        [(n, top, sl,
-          n <= IVF_AUTO_COMPAT_N,
-          n > IVF_AUTO_COMPAT_N and top + PQ_SHORTLIST > PQ_SHORTLIST_CAP)],
-        "n_vectors LONG, top_blob LONG, shortlist INT, "
-        "compat_pinned BOOLEAN, clamped BOOLEAN",
+        [(n, top, sl, top + PQ_SHORTLIST > PQ_SHORTLIST_CAP)],
+        "n_vectors LONG, top_blob LONG, shortlist INT, clamped BOOLEAN",
     )
 
 

@@ -1953,9 +1953,10 @@ def run_ivfpq_search_stream(
     # auto_nprobe over the one fused stats pass — the estimates track
     # appends/forgets between batches, like every other search stage;
     # r11 review: coercing nprobe to the fixed NPROBE here kept the
-    # auto rule away from the one long-lived surface it was built for),
-    # and auto floors at max(PQ_SHORTLIST, k) / NPROBE, so only
-    # explicit values can conflict with k or fall below 1
+    # auto rule away from the one long-lived surface it was built for).
+    # The auto values are max(top blob + PQ_SHORTLIST, k) and
+    # max(blob cells + 1, NPROBE) at every store size, so only explicit
+    # values can conflict with k or fall below 1
     k_eff = k if k is not None else TOPK
     if k_eff < 1 or (shortlist is not None and k_eff > shortlist):
         raise ValueError(

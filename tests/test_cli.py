@@ -776,12 +776,16 @@ def test_pq_index_cli_build_encode_report(spark, tmp_path, capfd):
         cli.main(["pq-index", "--input", emb_in, "--output", root,
                   "--forget", "1", "--shortlist-report"])
     # --shortlist-report prints the auto-shortlist decision over the
-    # stored codes (r10): compat-pinned at this SF, not clamped
+    # stored codes (r10): the top blob + PQ_SHORTLIST, not clamped
     cli.main(["pq-index", "--input", emb_in, "--output", root,
               "--shortlist-report"])
     out = capfd.readouterr().out
     assert "top_blob" in out and "clamped" in out
+    assert "compat_pinned" not in out
     assert "false" in out  # clamped=false rendered
+    row = similarity.shortlist_report(spark, root).first()
+    assert row.shortlist == row.top_blob + similarity.PQ_SHORTLIST
+    assert f"|{row.shortlist}" in out.replace(" ", "")
     # all maintenance modes refuse an unbuilt root
     import pytest
 

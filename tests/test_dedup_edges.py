@@ -580,13 +580,15 @@ def test_plan_size_probe_sql_matches_jdf(spark, sf_dir):
 
 
 def test_ivf_auto_subk_rule():
-    # Compat zone: every tested SF (n <= 2000) keeps SUBK=5, so the
-    # driver oracles (whose _SEEDS_CTE hardcodes SUBK) are bit-unchanged
-    # under the auto default.
-    for n in (1, 500, 2000, similarity.IVF_AUTO_COMPAT_N):
+    # One rule at every size: K = n_labels * subk tracks ceil(sqrt(n)),
+    # floored at SUBK.  Every tested SF (n <= 2000 over 10 labels) sits
+    # on the floor; the same small corpora with fewer labels do not.
+    for n in (1, 500, 2000):
         assert similarity.auto_subk(n, 10) == similarity.SUBK
         assert similarity.auto_subk(n, 50) == similarity.SUBK
-    # Adaptive zone: K = n_labels * subk tracks ceil(sqrt(n)).
+    assert similarity.auto_subk(2000, 1) == 45  # K = 45 = ceil(sqrt(2000))
+    assert similarity.auto_subk(500, 2) == 12  # ceil(23 / 2)
+    assert similarity.auto_subk(4096, 10) == 7  # ceil(64 / 10)
     assert similarity.auto_subk(10_000, 10) == 10  # K = 100 = sqrt(10^4)
     assert similarity.auto_subk(1_000_000, 10) == 100  # K = 1000
     assert similarity.auto_subk(1_000_000, 50) == 20  # K = 1000

@@ -954,99 +954,128 @@ def test_ivfpq_geometry_validation_and_legacy_read(spark, tmp_path, embs):
 
 
 def test_auto_shortlist_rule():
-    """Compat floor, monotonicity, floor, and cap of the r10 rule that
-    removed the fixed-shortlist knob (the auto_band_width / auto_subk
-    pattern)."""
-    # at or below the compat threshold: the fixed tested-SF constant,
-    # whatever the blob estimate says — every driver-SF hash unchanged
-    assert S.auto_shortlist(1, 1) == S.PQ_SHORTLIST
-    assert S.auto_shortlist(S.IVF_AUTO_COMPAT_N, 10**9) == S.PQ_SHORTLIST
-    # just above: blob + margin, floored at the fixed constant
-    above = S.IVF_AUTO_COMPAT_N + 1
-    assert S.auto_shortlist(above, 0) == S.PQ_SHORTLIST
-    assert S.auto_shortlist(above, 1600) == 1600 + S.PQ_SHORTLIST
+    """Floor, monotonicity and cap of the r10 rule that removed the
+    fixed-shortlist knob (the auto_band_width / auto_subk pattern) — one
+    rule at every corpus size."""
+    # the empty corpus gets the floor; any code word adds its blob
+    assert S.auto_shortlist(0) == S.PQ_SHORTLIST
+    assert S.auto_shortlist(1) == 1 + S.PQ_SHORTLIST
+    assert S.auto_shortlist(1600) == 1600 + S.PQ_SHORTLIST
     # monotone in the blob estimate
-    vals = [S.auto_shortlist(above, b) for b in (0, 10, 100, 1000, 10**7)]
+    vals = [S.auto_shortlist(b) for b in (0, 10, 100, 1000, 10**7)]
     assert vals == sorted(vals)
     # capped: the shortlist frame must stay broadcast-sized
-    assert S.auto_shortlist(above, 10**9) == S.PQ_SHORTLIST_CAP
+    assert S.auto_shortlist(10**9) == S.PQ_SHORTLIST_CAP
     assert S.PQ_SHORTLIST <= S.PQ_SHORTLIST_CAP
 
 
 def test_auto_shortlist_estimator_counts_code_multiplicity(spark):
-    """_auto_shortlist_for reads (corpus size, top identical-code
-    multiplicity) from one aggregate over the code rows."""
+    """_blob_stats reads (corpus size, top code multiplicity, 0 cells
+    without a cluster column) from one aggregate over the code rows, and
+    auto_shortlist sizes from that multiplicity at any corpus size.
+    Two-subspace codes (m < 4) allow no slack: identical words only."""
     rows = (
         [([1, 2], )] * 7 + [([3, 4], )] * 2 + [([5, 6], )]
     )
     coded = spark.createDataFrame(rows, "codes ARRAY<INT>")
-    # n=10 <= compat floor -> fixed
-    assert S._auto_shortlist_for(coded) == S.PQ_SHORTLIST
-    # replicate the same multiplicity structure past the compat floor:
-    # 600 copies of one code word in a 1000-row frame -> blob=600
+    assert S._blob_stats(coded) == (10, 7, 0)
+    assert S.auto_shortlist(S._blob_stats(coded)[1]) == 7 + S.PQ_SHORTLIST
+    # 600 copies of one code word in a 4600-row frame -> blob=600
     big = (
         [([1, 2], )] * 600
         + [([i, i + 1], ) for i in range(10, 4010)]
     )
     coded_big = spark.createDataFrame(big, "codes ARRAY<INT>")
-    assert (
-        S._auto_shortlist_for(coded_big) == 600 + S.PQ_SHORTLIST
-    )
+    assert S._blob_stats(coded_big) == (4600, 600, 0)
     # empty frame: the floor, not a crash
     empty = spark.createDataFrame([], "codes ARRAY<INT>")
-    assert S._auto_shortlist_for(empty) == S.PQ_SHORTLIST
+    assert S._blob_stats(empty) == (0, 0, 0)
+    assert S.auto_shortlist(S._blob_stats(empty)[1]) == S.PQ_SHORTLIST
 
 
-def test_auto_shortlist_equals_fixed_below_compat_floor(spark, tmp_path, embs):
-    """Every tested-SF corpus sits under IVF_AUTO_COMPAT_N, so
-    shortlist=None must be BIT-IDENTICAL to the old fixed
-    shortlist=PQ_SHORTLIST call on both the in-memory rerank and the
-    stored-artifact search — the compat pin that keeps every driver
-    oracle hash unchanged."""
-    cb = S.pq_codebook(embs)
-    cb.persist().count()
-    try:
-        fixed = {
-            tuple(r)
-            for r in S.pq_topk_rerank(
-                embs, shortlist=S.PQ_SHORTLIST, codebook=cb
-            ).collect()
-        }
-        auto = {
-            tuple(r)
-            for r in S.pq_topk_rerank(embs, shortlist=None, codebook=cb).collect()
-        }
-        assert auto == fixed
-    finally:
-        cb.unpersist()
-    ivf_root = str(tmp_path / "ivf")
-    pq_root = str(tmp_path / "pq")
-    S.build_ivf_index(embs, ivf_root, iters=0)
-    S.build_pq_index(embs, pq_root)
-    fixed_ix = {
-        tuple(r)
+def test_blob_stats_counts_near_identical_code_words(spark):
+    """At m = 8 a code word counts toward every blob it matches in all
+    but two subspaces, so a blob whose members split over sub-centroids
+    is read whole (the Gaussian-blob case the identical-word count
+    under-read); shorter codes count identical words only."""
+    base = [1, 2, 3, 4, 5, 6, 7, 8]
+
+    def moved(*subs):
+        return [c + 20 if s in subs else c for s, c in enumerate(base)]
+
+    rows = (
+        [(base,)] * 5 + [(moved(0),)] * 3 + [(moved(6, 7),)] * 2
+        + [(moved(0, 1, 2),)] * 4 + [([9] * 8,)]
+    )
+    coded = spark.createDataFrame(rows, "codes ARRAY<INT>")
+    # base joins moved(0) (masking {0, x}: 8) or moved(6, 7) (masking
+    # {6, 7}: 7); moved(0) and moved(6, 7) differ in three subspaces, and
+    # so does moved(0, 1, 2) from base (it joins moved(0) alone: 7)
+    assert S._blob_stats(coded) == (15, 8, 0)
+    m4 = [([1, 2, 3, 4],)] * 3 + [([9, 2, 3, 4],)] * 2 + [([9, 9, 3, 4],)]
+    coded4 = spark.createDataFrame(m4, "codes ARRAY<INT>")
+    assert S._blob_stats(coded4) == (6, 3, 0)
+
+
+def test_default_sizing_beats_fixed_on_gaussian_blobs(spark, tmp_path):
+    """One sizing rule at every corpus size: on a small corpus (2000
+    vectors, 10 Gaussian blobs of 200 in 32 dims, noise 0.35 — the
+    benchmark's ANN shape) the default-sized stored-index search reaches
+    a strictly higher recall@5 against NumPy brute force than the old
+    fixed (shortlist=PQ_SHORTLIST, nprobe=NPROBE) parameters, because
+    the blobs' members share code words that ADC cannot rank apart."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    dim, k = 32, 5
+    centers = rng.normal(size=(10, dim))
+    labels = np.repeat(np.arange(10), 200)
+    corpus = centers[labels] + 0.35 * rng.normal(size=(2000, dim))
+    q_labels = rng.integers(0, 10, 32)
+    qvecs = centers[q_labels] + 0.35 * rng.normal(size=(32, dim))
+
+    def write(path, ids, vecs, labs):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(ids, pa.int64()),
+                "label": pa.array(labs, pa.int64()),
+                "embedding": pa.array(
+                    vecs.astype(np.float32).tolist(), pa.list_(pa.float32())
+                ),
+            }),
+            path,
+        )
+
+    qids = np.arange(32) + 10_000_000
+    write(str(tmp_path / "corpus.parquet"), np.arange(2000), corpus, labels)
+    write(str(tmp_path / "queries.parquet"), qids, qvecs, q_labels)
+    emb = spark.read.parquet(str(tmp_path / "corpus.parquet"))
+    queries = spark.read.parquet(str(tmp_path / "queries.parquet"))
+    ivf_root, pq_root = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    S.build_ivf_index(emb, ivf_root)
+    S.build_pq_index(emb, pq_root)
+
+    unit = corpus / np.linalg.norm(corpus, axis=1, keepdims=True)
+    qunit = qvecs / np.linalg.norm(qvecs, axis=1, keepdims=True)
+    exact_idx = np.argsort(-(qunit @ unit.T), axis=1, kind="stable")[:, :k]
+    exact = {int(q): set(row.tolist()) for q, row in zip(qids, exact_idx)}
+
+    def recall(**sizing):
+        got: dict[int, set] = {}
         for r in S.ivfpq_topk_from_index(
-            spark, ivf_root, pq_root, embs, shortlist=S.PQ_SHORTLIST
-        ).collect()
-    }
-    auto_ix = {
-        tuple(r)
-        for r in S.ivfpq_topk_from_index(
-            spark, ivf_root, pq_root, embs, shortlist=None
-        ).collect()
-    }
-    assert auto_ix == fixed_ix
-    # nprobe has the same compat pin (r11 auto_nprobe): the full-auto
-    # call must equal the old fixed (NPROBE, PQ_SHORTLIST) call at
-    # tested SFs
-    both_fixed = {
-        tuple(r)
-        for r in S.ivfpq_topk_from_index(
-            spark, ivf_root, pq_root, embs,
-            nprobe=S.NPROBE, shortlist=S.PQ_SHORTLIST,
-        ).collect()
-    }
-    assert both_fixed == fixed_ix
+            spark, ivf_root, pq_root, emb, k=k, queries=queries, **sizing
+        ).collect():
+            got.setdefault(r.query_id, set()).add(r.neighbor_id)
+        S.release_cached()
+        return sum(len(got.get(q, set()) & nb) for q, nb in exact.items()) / (
+            k * len(exact)
+        )
+
+    fixed = recall(shortlist=S.PQ_SHORTLIST, nprobe=S.NPROBE)
+    default = recall()
+    assert default > fixed, (default, fixed)
 
 
 def test_auto_shortlist_restores_dense_blob_recall(spark, tmp_path):
@@ -1056,7 +1085,7 @@ def test_auto_shortlist_restores_dense_blob_recall(spark, tmp_path):
     the fixed shortlist-50, auto-sizing from the measured code
     multiplicity restores rerank recall.
 
-    Measured at this scale (n=6000 > compat, 50 clusters x ~120
+    Measured at this scale (n=6000, 50 clusters x ~120
     members): top multiplicity 134 ~ blob size, auto shortlist 184,
     recall 0.553 (fixed-50) -> 1.0 (auto).  Asserted as bands.
 
@@ -1161,7 +1190,7 @@ def test_auto_shortlist_reads_exact_dup_blobs_at_any_geometry(spark, tmp_path):
         enc = S._pq_encoded(
             S._normed(e), S._persist(S._pq_packed(cb)), S.PQ_M
         )
-        auto = S._auto_shortlist_for(enc.select("codes"))
+        auto = S.auto_shortlist(S._blob_stats(enc.select("codes"))[1])
         # blob size ~6000/4 (hash-assigned components are near-even);
         # the estimate must read the blob, not the floor
         assert auto >= 1000, auto
@@ -1173,18 +1202,18 @@ def test_auto_shortlist_reads_exact_dup_blobs_at_any_geometry(spark, tmp_path):
 
 def test_shortlist_report_reads_the_stored_codes(spark, tmp_path, embs):
     """The observability half of auto_shortlist (r10): one row over the
-    pq root's latest-wins codes store — compat-pinned at tested SFs, the
-    blob estimate visible, and the cap clamp SIGNALED (the one lossy
+    pq root's latest-wins codes store — the blob estimate visible, the
+    shortlist it sizes, and the cap clamp SIGNALED (the one lossy
     edge: a blob past PQ_SHORTLIST_CAP serves with a shortlist it has
     outgrown, and only this report says so)."""
     pq_root = str(tmp_path / "pq")
     S.build_pq_index(embs, pq_root)
     row = S.shortlist_report(spark, pq_root).first()
     assert row.n_vectors == embs.count()
-    assert row.compat_pinned and not row.clamped
-    assert row.shortlist == S.PQ_SHORTLIST
-    # fabricate stores past the compat floor (the report reads only
-    # codes + pq_meta, both plain parquet): a 600-blob among uniques...
+    assert row.top_blob >= 1 and not row.clamped
+    assert row.shortlist == row.top_blob + S.PQ_SHORTLIST
+    # fabricate stores (the report reads only codes + pq_meta, both
+    # plain parquet): a 600-blob among uniques...
     blob_root = str(tmp_path / "blob")
     spark.read.parquet(f"{pq_root}/pq_meta").write.parquet(
         f"{blob_root}/pq_meta"
@@ -1198,7 +1227,7 @@ def test_shortlist_report_reads_the_stored_codes(spark, tmp_path, embs):
     row = S.shortlist_report(spark, blob_root).first()
     assert (row.n_vectors, row.top_blob) == (5000, 600)
     assert row.shortlist == 600 + S.PQ_SHORTLIST
-    assert not row.compat_pinned and not row.clamped
+    assert not row.clamped
     # ...and a blob past the cap: clamped=true is the dedup-before-index
     # signal
     cap_root = str(tmp_path / "cap")
@@ -1229,25 +1258,25 @@ def test_dedup_first_unclamps_and_restores_recall(spark, tmp_path, monkeypatch):
     survivor, reads clamped=false, and recall over the survivor corpus
     returns to the unclamped regime.
 
-    Scaled down via the rule's own constants (cap 200, compat floor 256
-    — the rule is pure arithmetic over (n, top_blob), so small
-    constants exercise the identical code path the 8192 cap does; the
-    real-scale measurement is SCALING.md pq-dedup): 6000 background
+    Scaled down via the rule's own cap (250 — the rule is pure
+    arithmetic over top_blob, so a small cap exercises the identical code path the 8192 cap does; the
+    real-scale measurement is SCALING.md pq-dedup; the cap sits above
+    the deduped background's own reading, 154 near-identical code words
+    + 50): 6000 background
     vectors (50 clusters, the standard mixture) + an 800-member
     noise-0.05 blob at ~12% mass share — low enough that the trained
     sub-quantizers stay on the background and the blob shares one code
     word (measured top multiplicity 733; at >50% share the k-means
     mass pulls sub-centroids INTO the noise ball and the estimate
     under-reads — the documented degenerate geometry).  ADC ties the
-    whole blob, the clamped shortlist keeps the 200 lowest ids, and a
+    whole blob, the clamped shortlist keeps the 250 lowest ids, and a
     blob query's true top-5 (noise-ranked, uniform over members)
-    survives with p ~ 1/4 — so the degradation is asserted on the BLOB
+    survives with p ~ 1/3 — so the degradation is asserted on the BLOB
     queries, where it lives."""
     from cloudcomputing_flink_application_spark import cli
     from cloudcomputing_flink_application_spark.operators import dedup
 
-    monkeypatch.setattr(S, "PQ_SHORTLIST_CAP", 200)
-    monkeypatch.setattr(S, "IVF_AUTO_COMPAT_N", 256)
+    monkeypatch.setattr(S, "PQ_SHORTLIST_CAP", 250)
     corpus_dir = tmp_path / "corpus"
     corpus_dir.mkdir()
     fixtures.write_clustered_embeddings(str(corpus_dir / "bg.parquet"), n=6000)
@@ -1284,7 +1313,7 @@ def test_dedup_first_unclamps_and_restores_recall(spark, tmp_path, monkeypatch):
     cli.main(["pq-index", "--input", str(corpus_dir), "--output", root])
     row = S.shortlist_report(spark, root).first()
     assert row.clamped and row.top_blob >= 600, row
-    assert row.shortlist == 200
+    assert row.shortlist == 250
     before_blob = recall(e, root, min_query=6000)
     assert before_blob <= 0.6, before_blob
 
@@ -1323,24 +1352,19 @@ def test_dedup_first_unclamps_and_restores_recall(spark, tmp_path, monkeypatch):
 
 def test_auto_nprobe_rule():
     """auto_nprobe (r11, VERDICT r10 #4) — the serving twin of
-    auto_shortlist: compat floor, the measured-NPROBE floor above it,
+    auto_shortlist: the measured-NPROBE floor at every corpus size,
     monotone in the blob's cell spread."""
-    # at or below the compat threshold: the fixed tested-SF probe count,
-    # whatever the spread says (oracle hashes pinned)
-    assert S.auto_nprobe(S.IVF_AUTO_COMPAT_N, 10**6) == S.NPROBE
-    assert S.auto_nprobe(0, 0) == S.NPROBE
-    above = S.IVF_AUTO_COMPAT_N + 1
-    # above: NPROBE stays the floor — a spread the floor covers changes
-    # nothing (recall >= current at the current scan fraction)
-    assert S.auto_nprobe(above, 0) == S.NPROBE
-    assert S.auto_nprobe(above, S.NPROBE - 1) == S.NPROBE
+    # NPROBE stays the floor — a spread the floor covers changes nothing
+    # (recall >= current at the current scan fraction)
+    assert S.auto_nprobe(0) == S.NPROBE
+    assert S.auto_nprobe(S.NPROBE - 1) == S.NPROBE
     # a blob spanning more cells than the floor raises the probe count
     # past its spread (+ the margin)
-    assert S.auto_nprobe(above, S.NPROBE) == S.NPROBE + 1
-    assert S.auto_nprobe(above, 100) == 100 + S.NPROBE_BLOB_MARGIN
+    assert S.auto_nprobe(S.NPROBE) == S.NPROBE + 1
+    assert S.auto_nprobe(100) == 100 + S.NPROBE_BLOB_MARGIN
     # monotone
     spreads = [0, 10, 40, 41, 100, 10**4]
-    probes = [S.auto_nprobe(above, c) for c in spreads]
+    probes = [S.auto_nprobe(c) for c in spreads]
     assert probes == sorted(probes)
 
 
@@ -1363,7 +1387,7 @@ def test_blob_stats_fused_aggregate(spark):
     assert S._blob_stats(coded.limit(0)) == (0, 0, 0)
 
 
-def test_auto_nprobe_restores_fragmented_blob_recall(spark, tmp_path, monkeypatch):
+def test_auto_nprobe_restores_fragmented_blob_recall(spark, tmp_path):
     """The failure auto_nprobe exists for, demonstrated end to end: with
     K ~ sqrt(n) each label owns ~sqrt(n)/|labels| sub-centroids, and a
     near-dup blob's members SPREAD across its label's cells (the
@@ -1379,7 +1403,6 @@ def test_auto_nprobe_restores_fragmented_blob_recall(spark, tmp_path, monkeypatc
     regime; at 23% the trained sub-quantizer already subdivides the
     noise ball and the estimate under-reads, the documented boundary),
     so _blob_stats reads the spread and auto_nprobe probes past it."""
-    monkeypatch.setattr(S, "IVF_AUTO_COMPAT_N", 256)
     corpus_dir = tmp_path / "corpus"
     corpus_dir.mkdir()
     fixtures.write_clustered_embeddings(str(corpus_dir / "bg.parquet"), n=12000)
@@ -1412,7 +1435,7 @@ def test_auto_nprobe_restores_fragmented_blob_recall(spark, tmp_path, monkeypatc
         # spreads over most of its label's 60 cells
         assert top_blob >= 1200, top_blob
         assert 250 <= blob_cells <= 400, blob_cells
-        auto = S.auto_nprobe(n_corpus, blob_cells)
+        auto = S.auto_nprobe(blob_cells)
         assert auto == blob_cells + S.NPROBE_BLOB_MARGIN
 
         queries = base.filter(
@@ -1427,7 +1450,7 @@ def test_auto_nprobe_restores_fragmented_blob_recall(spark, tmp_path, monkeypatc
         )
         exact.persist()
         total = exact.count()
-        shortlist = S.auto_shortlist(n_corpus, top_blob)
+        shortlist = S.auto_shortlist(top_blob)
 
         def recall(nprobe):
             got = S._ivfpq_search(
@@ -1463,13 +1486,9 @@ def test_rerank_broadcast_gate(spark, tmp_path, embs, monkeypatch):
     pq_root = str(tmp_path / "pq")
     S.build_ivf_index(embs, ivf_root, iters=0)
     S.build_pq_index(embs, pq_root)
-    want = {
-        tuple(r)
-        for r in S.ivfpq_topk_from_index(
-            spark, ivf_root, pq_root, embs,
-            nprobe=S.NPROBE, shortlist=S.PQ_SHORTLIST,
-        ).collect()
-    }
+    # the auto path under the default ceiling (the hinted broadcast)
+    want = {tuple(r) for r in S.ivfpq_topk_from_index(spark, ivf_root, pq_root, embs).collect()}
+    S.release_cached()
     # The gate removes the broadcast HINT; at real scale the planner's
     # own threshold then refuses an over-sized relation.  To observe the
     # hint's absence at test scale (where the planner would happily
@@ -1479,8 +1498,8 @@ def test_rerank_broadcast_gate(spark, tmp_path, embs, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # force the fallback: the auto path's exact stride count over
-        # the stored rows (5 queries x shortlist 50 = 250 candidate
-        # rows) exceeds a 100-row ceiling
+        # the stored rows (5 queries x a shortlist of at least 50 = 250+
+        # candidate rows) exceeds a 100-row ceiling
         monkeypatch.setattr(S, "RERANK_BROADCAST_MAX_ROWS", 100)
         gated = S.ivfpq_topk_from_index(spark, ivf_root, pq_root, embs)
         plan = physical_plan(gated)

@@ -151,3 +151,36 @@ def test_saturated_vendors_twelve_hour_bit_parity(spark):
         (7, "2022-03-04 00:01:00", "2022-03-04 13:30:00", 2),
         (8, "2022-03-04 12:00:00", "2022-03-04 23:40:00", 2),
     }
+
+
+def test_trips_goldens_hold_in_duckdb():
+    """Independent cross-check of the hand-derived TRIPS goldens: the
+    bodies of the registry's Q-CONG / Q-SAT oracle SQL, run in DuckDB
+    over TRIPS loaded as ``taxi_trips`` (the derived-view CTE that maps
+    ``events`` onto ``taxi_trips`` is stripped), give the same rows as
+    the Spark operators above."""
+    import duckdb
+
+    from cloudcomputing_flink_application_spark.registry import Q_CONG_SQL, Q_SAT_SQL
+    from cloudcomputing_flink_application_spark.sources.derived import TAXI_TRIPS_CTE
+
+    view = f"WITH {TAXI_TRIPS_CTE.strip()}"
+    assert view in Q_CONG_SQL and f"{view}," in Q_SAT_SQL
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE taxi_trips (vendor_id INT, tpep_pickup_datetime "
+        "TIMESTAMP, tpep_dropoff_datetime TIMESTAMP, total_amount DOUBLE, "
+        "congestion_surcharge DOUBLE)"
+    )
+    con.executemany("INSERT INTO taxi_trips VALUES (?, ?, ?, ?, ?)", TRIPS)
+    cong = con.execute(Q_CONG_SQL.replace(view, "")).fetchall()
+    assert {(d, n, round(float(a), 2)) for d, n, a in cong} == {
+        ("2022/03/01", 3, 20.19),
+        ("2022/03/02", 2, 10.01),
+    }
+    sat = con.execute(Q_SAT_SQL.replace(f"{view},", "WITH")).fetchall()
+    assert set(sat) == {
+        (5, "2022-03-03 10:00:00", "2022-03-03 10:30:00", 2),
+        (6, "2022-03-03 10:05:00", "2022-03-03 10:45:00", 2),
+    }
+    con.close()
